@@ -8,14 +8,15 @@ partitions the batch touched and overwrites those partitions
 
 - **Idempotent**: every written partition is stamped with the writing
   batch's id (``__batch_id`` column). A replayed micro-batch skips any
-  day partition already stamped with its id, so partial sums never
-  merge twice under at-least-once delivery — even when the failure
-  happened between the data write and the high-water-marker write, or
+  day partition already stamped with its id (or a later one), so
+  partial sums never merge twice under at-least-once delivery — even
   when only SOME of the touched partitions were swapped before the
-  crash. The marker file is a fast-path optimization only; correctness
-  never depends on it.
-- **Bounded work per batch**: only partitions with new data are
-  rewritten; the rollup table grows append-mostly by date.
+  crash: the unstamped days merge, the stamped ones stay untouched.
+- **Few jobs per batch**: the sink keeps no side files and infers no
+  schema. A merge batch runs the batch aggregate, one collect of its
+  days, one probe of the touched days' stamps, the merge and the write.
+- **Bounded work per batch**: only partitions with new data are read
+  and rewritten; the rollup table grows append-mostly by date.
 - **Readers need no coordination**: plain ``spark.read.parquet`` sees
   whole partitions before/after, never mid-write (parquet committers
   swap directories atomically enough for batch readers).
@@ -31,7 +32,10 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+from energy_pandas_spark.streaming.stats import _fs_path
 
 __all__ = ["continuous_rollup", "make_rollup_writer", "rollup_batch"]
 
@@ -71,6 +75,36 @@ _BUILTIN_MEASURES = {"n_events": "sum", "n_values": "sum", "sum_value": "sum"}
 _MERGE_FNS = {"sum": F.sum, "max": F.max, "min": F.min}
 
 
+def _read_days(
+    spark: SparkSession, path: str, fresh: DataFrame, days: list
+) -> DataFrame | None:
+    """The stored rows of ``days``, or None before the first write.
+
+    The table is read with an explicit schema (``fresh``'s plus the
+    stamp), so no job infers it, and partition pruning keeps the read to
+    the touched days. Rows written before the stamp existed read it as
+    null, which no batch id matches; rows written before ``n_values``
+    fall back to the old all-rows denominator (exact when ``value`` has
+    no nulls). Only a missing table means "first batch": any other read
+    failure propagates, because writing the batch as if it were the
+    first would drop the day's history.
+    """
+    fs, p = _fs_path(spark, path)
+    if not fs.exists(p):
+        return None
+    # a new StructType: ``fresh.schema`` is cached and ``add`` mutates it
+    fields = [f for f in fresh.schema.fields if f.name != "__batch_id"]
+    schema = StructType([*fields, StructField("__batch_id", LongType())])
+    existing = (
+        spark.read.schema(schema).parquet(path).filter(F.col("day").isin(days))
+    )
+    if "n_values" in fresh.columns and "n_events" in fresh.columns:
+        existing = existing.withColumn(
+            "n_values", F.coalesce("n_values", "n_events")
+        )
+    return existing
+
+
 def make_rollup_writer(
     path: str,
     window: str = "1 hour",
@@ -102,124 +136,80 @@ def make_rollup_writer(
         )
     measure_fns = {**_BUILTIN_MEASURES, **extra}
 
-    marker = path.rstrip("/") + "__high_water"
-
-    def write_marker(spark, batch_id: int) -> None:
-        spark.createDataFrame([(batch_id,)], "b long").coalesce(1).write.mode(
-            "overwrite"
-        ).json(marker)
-
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        # fast path only: a missing/corrupt marker degrades to the
-        # per-partition stamp check below, never to a double merge
+        fresh = agg_fn(batch)
+        # schema-only checks: a bad accumulate fails before any job runs
+        measures = [c for c in fresh.columns if c in measure_fns]
+        derived = [c for c in ("avg_value",) if c in fresh.columns]
+        if derived and not (
+            "sum_value" in measures
+            and ("n_values" in measures or "n_events" in measures)
+        ):
+            raise ValueError(
+                "accumulate() emits avg_value without sum_value + "
+                "n_values (or n_events): the partition merge cannot "
+                "recombine an average without its sufficient statistics"
+            )
+        # every non-measure column is a GROUPING KEY on merge, so a
+        # custom ``accumulate`` with other dimensions merges correctly
+        # as long as every measure it emits is declared
+        keys = [
+            c
+            for c in fresh.columns
+            if c not in measures and c not in derived and c != "__batch_id"
+        ]
+        # an undeclared fractional-numeric column is almost certainly a
+        # measure; grouping by it would emit duplicate rows per window
+        # on merge (existing and fresh rows differ in the value)
+        suspicious = [
+            f.name
+            for f in fresh.schema.fields
+            if f.name in keys
+            and (
+                f.dataType.typeName() in ("double", "float")
+                or f.dataType.typeName().startswith("decimal")
+            )
+        ]
+        if suspicious:
+            raise ValueError(
+                f"accumulate() emits fractional-numeric column(s) "
+                f"{suspicious} outside the mergeable measure set "
+                f"{sorted(measure_fns)}: declare them via "
+                f"measures={{'col': 'sum'|'max'|'min'}} or they would be "
+                f"treated as grouping keys and duplicate rows per window "
+                f"on merge"
+            )
+        # persisted: feeds the days collect AND the merge union
+        fresh = fresh.persist()
         try:
-            last = spark.read.json(marker).collect()[0]["b"]
-        except Exception:
-            last = -1
-        if batch_id <= last:
-            return
-        # persisted: feeds the days collect AND the merge union (the
-        # sibling ingest writers persist for the same multi-consumer
-        # reason — without it an availableNow file source re-reads and
-        # re-aggregates the batch input per consumer)
-        fresh = agg_fn(batch).persist()
-        try:
-            days = [r[0] for r in fresh.select("day").distinct().collect()]
+            days = list({r[0] for r in fresh.select("day").collect()})
             if not days:
-                write_marker(spark, batch_id)
                 return
-            # the mergeable measures: re-aggregated with their declared
-            # merge fn; every other non-stamp column is a GROUPING KEY,
-            # so a custom ``accumulate`` with different dimensions (no
-            # event_type, extra columns) merges correctly as long as
-            # every measure it emits is declared
-            measures = [c for c in fresh.columns if c in measure_fns]
-            derived = [c for c in ("avg_value",) if c in fresh.columns]
-            if "avg_value" in derived and not (
-                "sum_value" in measures
-                and ("n_values" in measures or "n_events" in measures)
-            ):
-                raise ValueError(
-                    "accumulate() emits avg_value without sum_value + "
-                    "n_values (or n_events): the partition merge cannot "
-                    "recombine an average without its sufficient "
-                    "statistics"
-                )
-            keys = [
-                c
-                for c in fresh.columns
-                if c not in measures and c not in derived and c != "__batch_id"
-            ]
-            # an undeclared fractional-numeric column is almost
-            # certainly a measure, and grouping by it silently emits
-            # duplicate rows per window on merge (existing vs fresh
-            # rows differ in the value, so they group apart) — fail
-            # loud instead, mirroring the avg_value sufficiency check
-            fractional = {"double", "float"}
-            suspicious = [
-                f.name
-                for f in fresh.schema.fields
-                if f.name in keys
-                and (
-                    f.dataType.typeName() in fractional
-                    or f.dataType.typeName().startswith("decimal")
-                )
-            ]
-            if suspicious:
-                raise ValueError(
-                    f"accumulate() emits fractional-numeric column(s) "
-                    f"{suspicious} outside the mergeable measure set "
-                    f"{sorted(measure_fns)}: declare them via "
-                    f"measures={{'col': 'sum'|'max'|'min'}} or they "
-                    f"would be treated as grouping keys and duplicate "
-                    f"rows per window on merge"
-                )
-            try:
-                existing = spark.read.parquet(path).filter(
-                    F.col("day").isin(days)
-                )
-                if "__batch_id" not in existing.columns:  # pre-stamp table
-                    existing = existing.withColumn(
-                        "__batch_id", F.lit(-1).cast("long")
-                    )
-                # pre-n_values tables: fall back to the old all-rows
-                # denominator (exact when value has no nulls — the old
-                # behavior, kept for the rows that predate the column)
-                if "n_values" in measures and "n_values" not in existing.columns:
-                    existing = existing.withColumn(
-                        "n_values", F.col("n_events")
-                    )
-            except Exception:  # first batch: nothing to merge
-                existing = None
+            existing = _read_days(spark, path, fresh, days)
             if existing is not None:
                 # replay guard: whole partitions are swapped atomically,
                 # so a day stamped with this batch's id (or a later one)
-                # already contains this batch's contribution — leave it
-                # untouched. Days the crashed attempt did NOT swap merge
-                # normally.
+                # already holds this batch's contribution — leave it
+                # untouched; days a crashed attempt did NOT swap merge
                 done = {
                     r[0]
                     for r in existing.filter(F.col("__batch_id") >= batch_id)
                     .select("day")
-                    .distinct()
                     .collect()
                 }
                 todo = [d for d in days if d not in done]
                 if not todo:
-                    write_marker(spark, batch_id)
                     return
-                # merge: stored grain == query grain, so union +
-                # re-aggregate on the grouping keys is an exact combine
-                # of partial counts/sums; avg recomputes from the
-                # null-skipping denominator
+                # stored grain == query grain, so union + re-aggregate on
+                # the keys is an exact combine of partial counts/sums;
+                # avg recomputes from the null-skipping denominator
                 merged = (
                     existing.filter(F.col("day").isin(todo))
-                    .drop("__batch_id")
-                    .select(*keys, *measures, *derived)
+                    .select(*keys, *measures)
                     .unionByName(
                         fresh.filter(F.col("day").isin(todo)).select(
-                            *keys, *measures, *derived
+                            *keys, *measures
                         )
                     )
                     .groupBy(*keys)
@@ -230,34 +220,24 @@ def make_rollup_writer(
                         ]
                     )
                 )
-                if "avg_value" in derived:
+                if derived:
                     denom = (
                         "n_values" if "n_values" in measures else "n_events"
                     )
                     merged = merged.withColumn(
                         "avg_value",
-                        F.col("sum_value")
-                        / F.nullif(F.col(denom), F.lit(0)),
+                        F.col("sum_value") / F.nullif(F.col(denom), F.lit(0)),
                     )
                 merged = merged.select(*fresh.columns)
             else:
                 merged = fresh
-            merged = merged.withColumn(
-                "__batch_id", F.lit(batch_id).cast("long")
+            (
+                merged.withColumn("__batch_id", F.lit(batch_id).cast("long"))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("day")
+                .parquet(path)
             )
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-            try:
-                merged.write.mode("overwrite").partitionBy("day").parquet(path)
-            finally:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
-                )
-            write_marker(spark, batch_id)
         finally:
             fresh.unpersist()
 
@@ -278,10 +258,9 @@ def continuous_rollup(
     Each micro-batch's windowed aggregate REPLACES the date partitions
     it touches. Because a batch may cover only part of an hour, the
     batch aggregate is first merged with the existing partition content
-    by re-aggregating (sum/count merge; avg recomputed from sum+count
-    would be the purist path — here windows re-aggregate from the
-    union, which is exact because the stored grain equals the query
-    grain)."""
+    by re-aggregating the union (exact, because the stored grain equals
+    the query grain); ``avg_value`` is recomputed as ``sum_value /
+    n_values``."""
     write_batch = make_rollup_writer(path, window, accumulate, measures)
     writer = stream.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint

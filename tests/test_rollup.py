@@ -76,11 +76,9 @@ def test_rollup_matches_batch_recompute(spark, tmp_path):
 
 def test_replayed_batch_never_double_merges(spark, tmp_path):
     """At-least-once crash simulation: the SAME micro-batch is applied
-    twice with the marker file missing (as if the driver died between
-    the data write and the marker write) — the per-partition
-    ``__batch_id`` stamp must make the replay a no-op."""
-    import shutil
-
+    twice (as if the driver died after the data write but before the
+    streaming commit) — the per-partition ``__batch_id`` stamp must make
+    the replay a no-op."""
     from energy_pandas_spark.streaming.rollup import make_rollup_writer
 
     out = str(tmp_path / "rollup")
@@ -101,8 +99,6 @@ def test_replayed_batch_never_double_merges(spark, tmp_path):
         (r.window_start, r.event_type, r.n_events, r.sum_value)
         for r in spark.read.parquet(out).collect()
     )
-    # crash window: data committed, marker lost
-    shutil.rmtree(out.rstrip("/") + "__high_water")
     write_batch(batch, 0)  # replay of batch 0
     again = sorted(
         (r.window_start, r.event_type, r.n_events, r.sum_value)
@@ -143,12 +139,132 @@ def test_pre_stamp_table_upgrades_cleanly(spark, tmp_path):
     assert all(r["__batch_id"] == 7 for r in rows)
     assert rows[0].n_events == 2  # legacy content merged once
     # replay of the same batch is still a no-op
-    import shutil
-
-    shutil.rmtree(out.rstrip("/") + "__high_water")
     write_batch(batch, 7)
     again = spark.read.parquet(out).collect()
     assert again[0].n_events == 2
+
+
+def _day_files(out, day):
+    import os
+
+    d = os.path.join(out, f"day={day}")
+    return sorted(f for f in os.listdir(d) if not f.startswith((".", "_")))
+
+
+def test_rollup_corrupt_table_fails_not_wipes_history(spark, tmp_path):
+    """An unreadable partition must FAIL the batch (retryable), not be
+    treated as 'no table yet' — that path overwrote the day with the
+    batch's rows alone, dropping its stored history."""
+    import os
+    import shutil
+
+    import pytest
+
+    from energy_pandas_spark.streaming.rollup import make_rollup_writer, rollup_batch
+
+    out = str(tmp_path / "rollup")
+    src = str(tmp_path / "src")
+    _write_batchfile(spark, [(0, "2024-01-01 10:00:00", 1, "click", 1.0, "{}")], src + "/b0")
+    _write_batchfile(spark, [(1, "2024-01-01 11:00:00", 1, "click", 2.0, "{}")], src + "/b1")
+    write_batch = make_rollup_writer(out)
+    write_batch(spark.read.parquet(src + "/b0"), 0)
+
+    [name] = _day_files(out, "2024-01-01")
+    part = os.path.join(out, "day=2024-01-01", name)
+    shutil.copy(part, str(tmp_path / "good.parquet"))
+    with open(part, "wb") as f:
+        f.write(b"not parquet at all")
+    with pytest.raises(Exception):
+        write_batch(spark.read.parquet(src + "/b1"), 1)
+    # the partition was not swapped: once the file is repaired, the
+    # retried batch merges onto the full history
+    assert _day_files(out, "2024-01-01") == [name]
+    shutil.copy(str(tmp_path / "good.parquet"), part)
+    write_batch(spark.read.parquet(src + "/b1"), 1)
+    keys = ["window_start", "event_type", "n_events", "n_values", "sum_value", "avg_value"]
+    got = sorted(map(tuple, spark.read.parquet(out).select(*keys).collect()))
+    want = sorted(map(tuple, rollup_batch(spark.read.parquet(src + "/*")).select(*keys).collect()))
+    assert got == want and len(got) == 2
+
+
+def test_partial_swap_replay_merges_only_unstamped_day(spark, tmp_path):
+    """Crash after the write swapped ONE of the two days a batch
+    touched: the replay merges the day still carrying the older stamp,
+    leaves the already-stamped day untouched, and the table ends equal
+    to a batch recompute over all input."""
+    import shutil
+
+    from energy_pandas_spark.streaming.rollup import make_rollup_writer, rollup_batch
+
+    out = str(tmp_path / "rollup")
+    src = str(tmp_path / "src")
+    _write_batchfile(
+        spark,
+        [
+            (0, "2024-01-01 23:10:00", 1, "click", 1.0, "{}"),
+            (1, "2024-01-02 01:10:00", 2, "view", 2.0, "{}"),
+        ],
+        src + "/b0",
+    )
+    _write_batchfile(
+        spark,
+        [
+            (2, "2024-01-01 23:40:00", 1, "click", 4.0, "{}"),
+            (3, "2024-01-02 01:40:00", 2, "view", 8.0, "{}"),
+        ],
+        src + "/b1",
+    )
+    write_batch = make_rollup_writer(out)
+    write_batch(spark.read.parquet(src + "/b0"), 0)
+    snapshot = str(tmp_path / "day1_after_b0")
+    shutil.copytree(out + "/day=2024-01-01", snapshot)
+    write_batch(spark.read.parquet(src + "/b1"), 1)
+
+    # crash window: only day 2 had been swapped when the driver died
+    shutil.rmtree(out + "/day=2024-01-01")
+    shutil.copytree(snapshot, out + "/day=2024-01-01")
+    day1, day2 = _day_files(out, "2024-01-01"), _day_files(out, "2024-01-02")
+    write_batch(spark.read.parquet(src + "/b1"), 1)  # replay
+
+    assert _day_files(out, "2024-01-02") == day2  # stamped day untouched
+    assert _day_files(out, "2024-01-01") != day1  # unstamped day merged
+    stored = spark.read.parquet(out)
+    assert {r[0] for r in stored.select("__batch_id").collect()} == {1}
+    keys = ["window_start", "event_type", "n_events", "n_values", "sum_value", "avg_value"]
+    got = sorted(map(tuple, stored.select(*keys).collect()))
+    want = sorted(map(tuple, rollup_batch(spark.read.parquet(src + "/*")).select(*keys).collect()))
+    assert got == want and len(got) == 2
+
+
+def test_rollup_merge_batch_runs_few_jobs(spark, tmp_path):
+    """A merge-path micro-batch runs at most 6 Spark jobs: the batch
+    aggregate, its cache, the days collect, the stamp probe, the merge
+    shuffle and the write. Extra driver round trips (a marker file,
+    schema inference, distincts) are what made the writer fall behind
+    its stream."""
+    import uuid
+
+    from energy_pandas_spark.streaming.rollup import make_rollup_writer
+
+    out = str(tmp_path / "rollup")
+    src = str(tmp_path / "src")
+    _write_batchfile(spark, [(0, "2024-01-01 10:00:00", 1, "click", 1.0, "{}")], src + "/b0")
+    _write_batchfile(spark, [(1, "2024-01-01 10:30:00", 1, "click", 2.0, "{}")], src + "/b1")
+    write_batch = make_rollup_writer(out)
+    write_batch(spark.read.parquet(src + "/b0"), 0)
+
+    sc = spark.sparkContext
+    group = f"rollup-jobs-{uuid.uuid4().hex}"
+    batch = spark.read.parquet(src + "/b1")
+    sc.setJobGroup(group, group)
+    try:
+        write_batch(batch, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
+    [row] = spark.read.parquet(out).collect()
+    assert (row.n_events, row.sum_value) == (2, 3.0)  # the merge did run
 
 
 # ---------------------------------------------------------------------------
@@ -710,10 +826,7 @@ def test_declared_custom_measure_merges_exactly(spark, tmp_path):
         for r in spark.read.parquet(out).collect()
     }
     assert got == {"click": (2, 9.0), "view": (2, 7.0)}
-    # replayed batch (marker wiped): per-partition stamp still guards
-    import shutil
-
-    shutil.rmtree(out.rstrip("/") + "__high_water", ignore_errors=True)
+    # replayed batch: the per-partition stamp guards
     writer(spark.read.parquet(src + "/b2"), 1)
     again = {
         r.event_type: (r.n_events, r.max_value)
