@@ -19,12 +19,10 @@ Per batch (foreachBatch):
 3. pages' own canonical URLs are ALSO "seen" this batch — a page
    fetched now must never be re-enqueued, and an in-batch link to an
    in-batch page is satisfied, not frontier work;
-4. fresh  = cand anti-join (store ∪ batch pages), store read
-   excluding THIS batch's partition (replay safety);
-5. fresh frontier rows land partitioned by ``__batch_id`` with
-   dynamic partition overwrite; (fresh ∪ page) hashes append to the
-   seen store the same way — a replayed batch overwrites exactly its
-   own partitions and the frontier/store end state is unchanged.
+4. fresh  = cand anti-join (store ∪ batch pages);
+5. fresh frontier rows land in the frontier table and the (fresh ∪
+   page) hashes in the seen store, under the stamped-partition
+   contract of ``streaming/sink.py``.
 
 Scale shape: page text is scanned once for hrefs and never shuffled;
 only (hash, url, n_refs) strings/longs enter the aggregate and
@@ -39,7 +37,12 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from energy_pandas_spark.streaming.ingest import _read_or_none
+from energy_pandas_spark.streaming.sink import (
+    batch_caches,
+    history,
+    land,
+    start,
+)
 
 __all__ = [
     "make_frontier_ingest_writer",
@@ -61,8 +64,6 @@ def make_frontier_ingest_writer(
     rows (columns ``(id, href, url)``) BEFORE canonicalization — e.g.
     keep only in-scope domains; out-of-scope links leave no store
     entry, so widening the scope later re-discovers them."""
-    from pyspark import StorageLevel
-
     from energy_pandas_spark.operators.urls import canonical_url, extract_links
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
@@ -84,59 +85,39 @@ def make_frontier_ingest_writer(
             .withColumn("__h", F.xxhash64(F.lit("url-v1"), F.col("__curl")))
         )
 
-        # the batch's own pages count as seen from this batch on
-        page_hashes = (
-            batch.select(canonical_url(F.col(url_col)).alias("__curl"))
-            .filter(F.col("__curl").isNotNull())
-            .select(F.xxhash64(F.lit("url-v1"), F.col("__curl")).alias("__h"))
-            .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK_DESER)
-        )
-        try:
-            store = _read_or_none(spark, seen_path)
-            store_prev = (
-                store.filter(F.col("__batch_id") != batch_id).select(
-                    F.col("h").alias("__h")
+        with batch_caches() as keep:
+            # the batch's own pages count as seen from this batch on
+            page_hashes = keep(
+                batch.select(canonical_url(F.col(url_col)).alias("__curl"))
+                .filter(F.col("__curl").isNotNull())
+                .select(
+                    F.xxhash64(F.lit("url-v1"), F.col("__curl")).alias("__h")
                 )
-                if store is not None
-                else None
+                .distinct()
             )
+            store = history(spark, seen_path, batch_id)
+            if store is not None:
+                store = store.select(F.col("h").alias("__h"))
             seen = page_hashes
-            if store_prev is not None:
-                seen = seen.unionByName(store_prev)
-            fresh = cand.join(seen, "__h", "left_anti").persist(
-                StorageLevel.MEMORY_AND_DISK_DESER
+            if store is not None:
+                seen = seen.unionByName(store)
+            fresh = keep(cand.join(seen, "__h", "left_anti"))
+            land(
+                fresh.select(F.col("__curl").alias("url"), "n_refs"),
+                batch_id,
+                frontier_path,
             )
-            try:
-                (
-                    fresh.select(
-                        F.col("__curl").alias("url"), "n_refs"
-                    )
-                    .withColumn("__batch_id", F.lit(batch_id).cast("long"))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("__batch_id")
-                    .parquet(frontier_path)
-                )
-                # store additions are de-duped against history too: a
-                # fetched page was usually frontier-emitted earlier, and
-                # re-appending its hash every batch would grow the store
-                # by one corpus per crawl cycle
-                new_hashes = fresh.select("__h").unionByName(page_hashes).distinct()
-                if store_prev is not None:
-                    new_hashes = new_hashes.join(store_prev, "__h", "left_anti")
-                (
-                    new_hashes.select(F.col("__h").alias("h"))
-                    .withColumn("__batch_id", F.lit(batch_id).cast("long"))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("__batch_id")
-                    .parquet(seen_path)
-                )
-            finally:
-                fresh.unpersist()
-        finally:
-            page_hashes.unpersist()
+            # store additions are de-duped against history too: a
+            # fetched page was usually frontier-emitted earlier, and
+            # re-appending its hash every batch would grow the store
+            # by one corpus per crawl cycle
+            new_hashes = (
+                fresh.select("__h").unionByName(page_hashes).distinct()
+            )
+            if store is not None:
+                new_hashes = new_hashes.join(store, "__h", "left_anti")
+            new_hashes = new_hashes.select(F.col("__h").alias("h"))
+            land(new_hashes, batch_id, seen_path)
 
     return write_batch
 
@@ -151,12 +132,7 @@ def frontier_ingest(
 ):
     """Start the frontier query; returns the StreamingQuery."""
     write_batch = make_frontier_ingest_writer(frontier_path, seen_path, **kwargs)
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(stream, write_batch, checkpoint, trigger_available_now)
 
 
 def read_frontier(

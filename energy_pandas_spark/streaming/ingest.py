@@ -16,14 +16,10 @@ Per micro-batch (foreachBatch):
    (``crosscorpus_neardup_pairs`` with ``store_bands=`` — the accepted
    corpus's TEXT is touched only to verify the tiny candidate set),
 3. accepted docs land in the corpus table, their bands in the band
-   store — both written ``partitionBy('__batch_id', ...)`` with
-   dynamic partition overwrite.
+   store (partitioned by band as well).
 
-Replay safety: a replayed batch OVERWRITES exactly its own partitions
-(and both reads exclude the in-flight batch id), so a crash mid-append
-cannot double-ingest or leave half a batch counted as history — the
-idempotency unit is the (deterministic) batch id, the same contract
-Structured Streaming's foreachBatch documents.
+Replay safety is the stamped-partition contract of
+``streaming/sink.py``.
 
 Scale shape: per-batch cost is banding the batch (map-side) + one
 bucket equi-join against band partitions + verify joins on candidates.
@@ -37,28 +33,14 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from energy_pandas_spark.streaming.sink import (
+    batch_caches,
+    history,
+    land,
+    start,
+)
+
 __all__ = ["make_neardup_ingest_writer", "neardup_ingest", "read_corpus"]
-
-
-def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    # probe via Hadoop FS first: letting spark.read fail on a missing
-    # first-batch table logs a full WARN stacktrace per probe
-    from energy_pandas_spark.streaming.stats import _fs_path
-
-    fs, p = _fs_path(spark, path)
-    if not fs.exists(p):
-        return None
-    try:
-        return spark.read.parquet(path)
-    except Exception as exc:
-        # a directory with no data files yet (crash after mkdir) is
-        # legitimately "no store". ANY other failure — corrupt footer,
-        # transient FS error — must propagate: treating it as "empty
-        # store" would land the batch WITHOUT dedup against history,
-        # silently double-ingesting (the _read_table rule, stats.py)
-        if "UNABLE_TO_INFER_SCHEMA" in str(exc):
-            return None
-        raise
 
 
 def make_neardup_ingest_writer(
@@ -84,8 +66,8 @@ def make_neardup_ingest_writer(
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        batch = batch.persist()
-        try:
+        with batch_caches() as keep:
+            batch = keep(batch)
             # 1. in-batch near-dup dedup (keep smallest id per cluster)
             drops = minhash_dedup(
                 batch,
@@ -99,16 +81,9 @@ def make_neardup_ingest_writer(
             )
             fresh = batch.join(drops, id_col, "left_anti")
 
-            # 2. cross-corpus rejection against accepted history,
-            # excluding any half-written copy of THIS batch (replay)
-            corpus = _read_or_none(spark, corpus_path)
-            store_bands = _read_or_none(spark, bands_path)
-            if corpus is not None:
-                corpus = corpus.filter(F.col("__batch_id") != batch_id)
-            if store_bands is not None:
-                store_bands = store_bands.filter(
-                    F.col("__batch_id") != batch_id
-                ).drop("__batch_id")
+            # 2. cross-corpus rejection against accepted history
+            corpus = history(spark, corpus_path, batch_id)
+            store_bands = history(spark, bands_path, batch_id)
             if corpus is not None and store_bands is not None:
                 hits = crosscorpus_neardup_pairs(
                     fresh,
@@ -128,30 +103,14 @@ def make_neardup_ingest_writer(
                     id_col,
                     "left_anti",
                 )
-            fresh = fresh.withColumn(
-                "__batch_id", F.lit(batch_id).cast("long")
-            ).persist()
+            fresh = keep(fresh)
 
-            # 3. idempotent landing: overwrite exactly this batch's
-            # partitions in both tables
-            (
-                fresh.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__batch_id")
-                .parquet(corpus_path)
-            )
+            # 3. land the accepted docs, then their bands
+            land(fresh, batch_id, corpus_path)
             new_bands = _banded_buckets(
                 fresh, text_col, id_col, num_hashes, bands, shingle_size, seed
-            ).withColumn("__batch_id", F.lit(batch_id).cast("long"))
-            (
-                new_bands.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__batch_id", "band")
-                .parquet(bands_path)
             )
-            fresh.unpersist()
-        finally:
-            batch.unpersist()
+            land(new_bands, batch_id, bands_path, ("__batch_id", "band"))
 
     return write_batch
 
@@ -166,12 +125,7 @@ def neardup_ingest(
 ):
     """Start the ingest query; returns the StreamingQuery."""
     write_batch = make_neardup_ingest_writer(corpus_path, bands_path, **kwargs)
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(stream, write_batch, checkpoint, trigger_available_now)
 
 
 def read_corpus(spark: SparkSession, corpus_path: str) -> DataFrame:

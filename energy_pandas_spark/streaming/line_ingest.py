@@ -18,10 +18,9 @@ Per micro-batch (foreachBatch):
    never re-enters;
 4. documents rebuild from surviving lines; docs whose rebuilt text is
    empty are dropped (they carried nothing novel);
-5. accepted docs land partitioned by ``__batch_id`` with dynamic
-   partition overwrite, and the fresh digests append to the store the
-   same way — a replayed batch overwrites exactly its own partitions,
-   the idempotency contract ``streaming/ingest.py`` documents.
+5. accepted docs land in the corpus table and the fresh digests in
+   the store, under the stamped-partition contract of
+   ``streaming/sink.py``.
 
 Scale shape: per-batch cost is the batch explode (map-side), one
 digest aggregate, and one anti-join against the store — the store scan
@@ -36,7 +35,12 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from energy_pandas_spark.streaming.ingest import _read_or_none
+from energy_pandas_spark.streaming.sink import (
+    batch_caches,
+    history,
+    land,
+    start,
+)
 
 __all__ = [
     "make_line_dedup_ingest_writer",
@@ -61,34 +65,29 @@ def make_line_dedup_ingest_writer(
     BEFORE dedup (e.g. ``operators.text.gopher_filter``) — rejected
     documents contribute no digests, so they can never block a later
     good document's lines."""
-    from pyspark import StorageLevel
-
     from energy_pandas_spark.operators.text import _line_rows
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         if pre_filter is not None:
             batch = pre_filter(batch)
-        # persist: the batch source feeds the line explosion AND the
-        # final non-text-column join — without this an availableNow
-        # file source re-reads the batch's input files per consumer
-        batch = batch.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-        lines = (
-            _line_rows(batch, text_col, id_col, sep)
-            .withColumn(
-                "pos",
-                F.struct(
-                    F.col(id_col).cast("long").alias("i"),
-                    F.col("idx").alias("x"),
-                ),
+        with batch_caches() as keep:
+            # persist: the batch source feeds the line explosion AND the
+            # final non-text-column join — without this an availableNow
+            # file source re-reads the batch's input files per consumer
+            batch = keep(batch)
+            lines = keep(
+                _line_rows(batch, text_col, id_col, sep)
+                .withColumn(
+                    "pos",
+                    F.struct(
+                        F.col(id_col).cast("long").alias("i"),
+                        F.col("idx").alias("x"),
+                    ),
+                )
+                .withColumn("h", F.xxhash64(F.lit("line-v1"), F.col("key")))
             )
-            .withColumn("h", F.xxhash64(F.lit("line-v1"), F.col("key")))
-            .persist(StorageLevel.MEMORY_AND_DISK_DESER)
-        )
-        try:
-            store = _read_or_none(spark, digests_path)
-            if store is not None:
-                store = store.filter(F.col("__batch_id") != batch_id).select("h")
+            store = history(spark, digests_path, batch_id)
             winners = (
                 lines.filter(F.col("key").isNotNull())
                 .groupBy("h")
@@ -96,7 +95,7 @@ def make_line_dedup_ingest_writer(
             )
             if store is not None:
                 winners = winners.join(store, "h", "left_anti")
-            winners = winners.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+            winners = keep(winners)
 
             kept = (
                 lines.join(winners, "h", "left")
@@ -130,11 +129,9 @@ def make_line_dedup_ingest_writer(
                 # inner join here would silently drop it — LEFT join
                 # + coalesce mirrors the batch contract
                 how = "left"
-            out = (
-                batch.select(*[c for c in batch.columns if c != text_col])
-                .join(kept, id_col, how)
-                .withColumn("__batch_id", F.lit(batch_id).cast("long"))
-            )
+            out = batch.select(
+                *[c for c in batch.columns if c != text_col]
+            ).join(kept, id_col, how)
             if not drop_empty:
                 out = out.withColumn(
                     text_col, F.coalesce(F.col(text_col), F.lit(""))
@@ -142,24 +139,8 @@ def make_line_dedup_ingest_writer(
                     "n_lines_kept",
                     F.coalesce(F.col("n_lines_kept"), F.lit(0).cast("long")),
                 )
-            (
-                out.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__batch_id")
-                .parquet(corpus_path)
-            )
-            (
-                winners.select("h")
-                .withColumn("__batch_id", F.lit(batch_id).cast("long"))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__batch_id")
-                .parquet(digests_path)
-            )
-            winners.unpersist()
-        finally:
-            lines.unpersist()
-            batch.unpersist()
+            land(out, batch_id, corpus_path)
+            land(winners.select("h"), batch_id, digests_path)
 
     return write_batch
 
@@ -176,12 +157,7 @@ def line_dedup_ingest(
     write_batch = make_line_dedup_ingest_writer(
         corpus_path, digests_path, **kwargs
     )
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(stream, write_batch, checkpoint, trigger_available_now)
 
 
 def read_line_corpus(spark: SparkSession, corpus_path: str) -> DataFrame:

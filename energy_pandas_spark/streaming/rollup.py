@@ -3,8 +3,9 @@ stream (the "hypertable rollup" / materialized-view pattern).
 
 ``continuous_rollup`` attaches a ``foreachBatch`` sink that, per
 micro-batch, recomputes the windowed aggregate for exactly the date
-partitions the batch touched and overwrites those partitions
-(``partitionOverwriteMode=dynamic``). Properties that matter at scale:
+partitions the batch touched and overwrites those partitions (the
+stamped landing of ``streaming/sink.py``). Properties that matter at
+scale:
 
 - **Idempotent**: every written partition is stamped with the writing
   batch's id (``__batch_id`` column). A replayed micro-batch skips any
@@ -35,7 +36,12 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from energy_pandas_spark.streaming.stats import _fs_path
+from energy_pandas_spark.streaming.sink import (
+    batch_caches,
+    land,
+    read_table,
+    start,
+)
 
 __all__ = ["continuous_rollup", "make_rollup_writer", "rollup_batch"]
 
@@ -89,15 +95,13 @@ def _read_days(
     failure propagates, because writing the batch as if it were the
     first would drop the day's history.
     """
-    fs, p = _fs_path(spark, path)
-    if not fs.exists(p):
-        return None
     # a new StructType: ``fresh.schema`` is cached and ``add`` mutates it
     fields = [f for f in fresh.schema.fields if f.name != "__batch_id"]
     schema = StructType([*fields, StructField("__batch_id", LongType())])
-    existing = (
-        spark.read.schema(schema).parquet(path).filter(F.col("day").isin(days))
-    )
+    existing = read_table(spark, path, schema)
+    if existing is None:
+        return None
+    existing = existing.filter(F.col("day").isin(days))
     if "n_values" in fresh.columns and "n_events" in fresh.columns:
         existing = existing.withColumn(
             "n_values", F.coalesce("n_values", "n_events")
@@ -181,8 +185,8 @@ def make_rollup_writer(
                 f"on merge"
             )
         # persisted: feeds the days collect AND the merge union
-        fresh = fresh.persist()
-        try:
+        with batch_caches() as keep:
+            fresh = keep(fresh)
             days = list({r[0] for r in fresh.select("day").collect()})
             if not days:
                 return
@@ -231,15 +235,7 @@ def make_rollup_writer(
                 merged = merged.select(*fresh.columns)
             else:
                 merged = fresh
-            (
-                merged.withColumn("__batch_id", F.lit(batch_id).cast("long"))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("day")
-                .parquet(path)
-            )
-        finally:
-            fresh.unpersist()
+            land(merged, batch_id, path, ("day",))
 
     return write_batch
 
@@ -262,9 +258,4 @@ def continuous_rollup(
     the query grain); ``avg_value`` is recomputed as ``sum_value /
     n_values``."""
     write_batch = make_rollup_writer(path, window, accumulate, measures)
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(stream, write_batch, checkpoint, trigger_available_now)

@@ -3,10 +3,11 @@ table up to date from a stream without ever rescanning history.
 
 Each micro-batch reduces to per-key batch sketches (one map-combined
 aggregate over the batch only), unions them with the stored sketches,
-and swaps the tiny sketch table atomically (stage + rename, same
-pattern as ``sources.layout.compact``). Any rollup level then reads
-off the table via ``operators.sketches.merge_cardinality`` — no scan
-of the underlying events, ever.
+and swaps the tiny sketch table in whole (the swap protocol of
+``streaming/sink.py``, shared with ``sources.layout.compact``). Any
+rollup level then reads off the table via
+``operators.sketches.merge_cardinality`` — no scan of the underlying
+events, ever.
 
 Replay safety comes from the algebra, not bookkeeping: an HLL sketch
 is a vector of register maxima and union is element-wise ``max``, so
@@ -22,6 +23,14 @@ from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from energy_pandas_spark.streaming.sink import (
+    land,
+    read_table,
+    stamp,
+    start,
+    swap_in,
+)
+
 __all__ = [
     "make_cardinality_writer",
     "continuous_cardinality",
@@ -35,70 +44,15 @@ __all__ = [
 ]
 
 
-def _fs_path(spark: SparkSession, p: str):
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(p)
-    return path.getFileSystem(conf), path
-
-
-def _swap(spark: SparkSession, tmp: str, path: str) -> None:
-    """Crash-safe table swap via a backup rename (HDFS rename is atomic;
-    a bare delete-then-rename has a window where the table is simply
-    gone, which silently discards all history on replay):
-
-    1. drop any stale ``__backup`` left by a crash after a prior step 3,
-    2. rename current -> ``__backup`` (old data is never deleted while
-       it is the only copy),
-    3. rename staging -> current,
-    4. drop ``__backup``.
-
-    A crash between 2 and 3 leaves the old table intact under
-    ``__backup``; ``_read_table`` restores it before the replayed batch
-    re-merges, so the documented all-or-nothing guarantee holds.
-
-    Reader caveat: the guarantee is for reads that LIST the directory
-    after a swap completes. A lazy DataFrame whose file listing was
-    captured BEFORE a swap races the step-4 backup delete — its action
-    can hit missing files. Callers that hold reads across maintenance
-    commits must re-read (or collect eagerly); the sketch tables are
-    1-file coalesced precisely so eager reads are cheap."""
-    fs, dst = _fs_path(spark, path)
-    _, src = _fs_path(spark, tmp)
-    _, bak = _fs_path(spark, path.rstrip("/") + "__backup")
-    fs.delete(bak, True)
-    if fs.exists(dst) and not fs.rename(dst, bak):
-        raise IOError(f"sketch table backup {path} failed")
-    if not fs.rename(src, dst):
-        if fs.exists(bak):  # restore so the table is never lost
-            fs.rename(bak, dst)
-        raise IOError(f"sketch table swap {tmp} -> {path} failed")
-    fs.delete(bak, True)
-
-
-def _recover_backup(spark: SparkSession, path: str) -> bool:
-    """If ``path`` is missing but a ``__backup`` from an interrupted
-    :func:`_swap` survives, restore it. Returns True when the table
-    exists after the call. Shared by the sketch readers and
-    ``sources/layout.compact``."""
-    fs, dst = _fs_path(spark, path)
-    if not fs.exists(dst):
-        _, bak = _fs_path(spark, path.rstrip("/") + "__backup")
-        if fs.exists(bak):
-            fs.rename(bak, dst)
-    return bool(fs.exists(dst))
-
-
-def _read_table(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read the sketch table, restoring from ``__backup`` if a crash
-    landed between ``_swap`` steps 2 and 3. Returns None ONLY if the
-    table has never been written — any other read failure (corrupt
-    footer, transient FS error) propagates, because treating it as
-    "no table" would make the next batch swap the whole accumulated
-    history away and delete it."""
-    if not _recover_backup(spark, path):
-        return None
-    return spark.read.parquet(path)
+def _stored(spark: SparkSession, path: str, what: str = "sketch table"):
+    """The stored table, through ``read_table`` like every sketch
+    reader: it restores the ``__backup`` a writer that crashed between
+    the two swap renames left (a bare ``spark.read.parquet`` would
+    raise PATH_NOT_FOUND in exactly that window)."""
+    table = read_table(spark, path)
+    if table is None:
+        raise FileNotFoundError(f"no {what} at {path}")
+    return table
 
 
 def make_cardinality_writer(
@@ -112,11 +66,10 @@ def make_cardinality_writer(
     keys = list(key_cols)
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
         fresh = batch.groupBy(*keys).agg(
             F.hll_sketch_agg(F.col(value_col), F.lit(lgk)).alias("hll")
         )
-        existing = _read_table(spark, path)  # None on first batch
+        existing = read_table(batch.sparkSession, path)  # None at first
         if existing is not None:
             merged = (
                 existing.unionByName(fresh)
@@ -125,9 +78,7 @@ def make_cardinality_writer(
             )
         else:
             merged = fresh
-        tmp = path.rstrip("/") + "__staging"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        _swap(spark, tmp, path)
+        swap_in(merged, path)
 
     return write_batch
 
@@ -143,12 +94,7 @@ def continuous_cardinality(
 ):
     """Start the maintenance query; returns the StreamingQuery."""
     write_batch = make_cardinality_writer(path, key_cols, value_col, lgk)
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(stream, write_batch, checkpoint, trigger_available_now)
 
 
 def read_cardinality(
@@ -160,10 +106,7 @@ def read_cardinality(
     table alone."""
     from energy_pandas_spark.operators.sketches import merge_cardinality
 
-    table = _read_table(spark, path)
-    if table is None:
-        raise FileNotFoundError(f"no sketch table at {path}")
-    return merge_cardinality(table, by=by)
+    return merge_cardinality(_stored(spark, path), by=by)
 
 
 def make_quantile_writer(
@@ -192,8 +135,7 @@ def make_quantile_writer(
     keys = list(key_cols)
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        existing = _read_table(spark, path)
+        existing = read_table(batch.sparkSession, path)
         if existing is not None:
             high = existing.agg(F.max("__batch_id")).collect()[0][0]
             if high is not None and batch_id <= high:
@@ -212,10 +154,7 @@ def make_quantile_writer(
             )
         else:
             merged = fresh
-        merged = merged.withColumn("__batch_id", F.lit(batch_id).cast("long"))
-        tmp = path.rstrip("/") + "__staging"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        _swap(spark, tmp, path)
+        swap_in(stamp(merged, batch_id), path)
 
     return write_batch
 
@@ -231,12 +170,7 @@ def continuous_quantiles(
 ):
     """Start the KLL quantile-table maintenance query."""
     write_batch = make_quantile_writer(path, key_cols, value_col, k)
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(stream, write_batch, checkpoint, trigger_available_now)
 
 
 def read_quantiles(
@@ -248,9 +182,7 @@ def read_quantiles(
     """Quantile estimates at any rollup level from the sketch table."""
     from energy_pandas_spark.operators.sketches import merge_quantiles
 
-    table = _read_table(spark, path)
-    if table is None:
-        raise FileNotFoundError(f"no sketch table at {path}")
+    table = _stored(spark, path)
     return merge_quantiles(table, quantiles, by=by, sketch_col="kll")
 
 
@@ -270,10 +202,7 @@ def make_cm_writer(
     """Per-micro-batch Count-Min maintenance. Unlike HLL (whose union
     is idempotent, so replays merge harmlessly) CM counters are SUMS —
     a replayed batch must not double-add. So the table stores PARTIAL
-    sparse sketches partitioned by ``__batch_id`` with dynamic
-    partition overwrite: a replay rewrites exactly its own partition,
-    nothing merges at write time, and no swap protocol is needed
-    (append-only idempotent landing, the ingest-store contract).
+    sparse sketches in stamped partitions (``streaming/sink.py``), and
     ``read_cm`` merges at read time — one integer (row, col) sum over
     batches * depth * width longs, executor-trivial at any horizon."""
     from energy_pandas_spark.operators.sketches import cm_sketch
@@ -285,13 +214,7 @@ def make_cm_writer(
             batch, value_col, by=keys, depth=depth, width=width,
             hasher=hasher,
         )
-        (
-            sk.withColumn("__batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(path)
-        )
+        land(sk, batch_id, path)
 
     return write_batch
 
@@ -309,12 +232,7 @@ def continuous_cm(
 ):
     """Start the maintenance query; returns the StreamingQuery."""
     write_batch = make_cm_writer(path, value_col, by, depth, width, hasher)
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(stream, write_batch, checkpoint, trigger_available_now)
 
 
 def read_cm(
@@ -326,10 +244,7 @@ def read_cm(
     ``operators.sketches.cm_query`` for point estimates."""
     from energy_pandas_spark.operators.sketches import cm_merge
 
-    table = _read_table(spark, path)
-    if table is None:
-        raise FileNotFoundError(f"no sketch table at {path}")
-    return cm_merge(table.drop("__batch_id"), by=by)
+    return cm_merge(_stored(spark, path).drop("__batch_id"), by=by)
 
 
 # ---------------------------------------------------------------------------
@@ -358,17 +273,14 @@ def make_portable_hll_writer(
     keys = list(key_cols)
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
         fresh = hll_registers(batch, value_col, by=keys, lgm=lgm)
-        existing = _read_table(spark, path)  # None on first batch
+        existing = read_table(batch.sparkSession, path)  # None at first
         merged = (
             hll_merge(existing.unionByName(fresh), by=keys)
             if existing is not None
             else fresh
         )
-        tmp = path.rstrip("/") + "__staging"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        _swap(spark, tmp, path)
+        swap_in(merged, path)
 
     return write_batch
 
@@ -384,12 +296,7 @@ def continuous_portable_hll(
 ):
     """Start the maintenance query; returns the StreamingQuery."""
     write_batch = make_portable_hll_writer(path, key_cols, value_col, lgm)
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(stream, write_batch, checkpoint, trigger_available_now)
 
 
 def read_portable_hll(
@@ -407,11 +314,5 @@ def read_portable_hll(
         hll_merge,
     )
 
-    # through _read_table like every other sketch reader: recovers the
-    # __backup left by a writer that crashed between the two _swap
-    # renames (a bare spark.read.parquet would raise PATH_NOT_FOUND in
-    # exactly that window)
-    regs = _read_table(spark, path)
-    if regs is None:
-        raise FileNotFoundError(f"no portable-HLL table at {path}")
+    regs = _stored(spark, path, "portable-HLL table")
     return hll_estimate(hll_merge(regs, by=by), by=by, lgm=lgm)

@@ -8,10 +8,8 @@ reach a per-batch threshold at all).
 
 Both count tables are ADDITIVE sums, so the store follows the
 Count-Min precedent (streaming/stats.py:make_cm_writer), not the
-HLL swap protocol: per-batch PARTIAL counts land partitioned by
-``__batch_id`` with dynamic partition overwrite — a replayed batch
-rewrites exactly its own partition, nothing merges at write time, no
-swap, and the landing is append-only idempotent. ``read_templates``
+HLL swap protocol: per-batch PARTIAL counts land in stamped
+partitions (``streaming/sink.py``). ``read_templates``
 merges at read time: one integer sum per table over batches x
 group-line rows, then the same integer threshold algebra as the batch
 detector.
@@ -34,7 +32,12 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from energy_pandas_spark.streaming.ingest import _read_or_none
+from energy_pandas_spark.streaming.sink import (
+    batch_caches,
+    land,
+    read_table,
+    start,
+)
 
 __all__ = [
     "make_template_writer",
@@ -76,13 +79,13 @@ def make_template_writer(
     """Build the ``foreachBatch`` writer (exposed for direct replay /
     merge testing). Each batch lands its partial (group, line, n_docs)
     and (group, n_docs) counts under its own ``__batch_id`` partition
-    — idempotent on replay by dynamic partition overwrite."""
+    (``streaming/sink.py``)."""
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         # two aggregates read the batch: persist so the micro-batch
         # source computes once (the multi-consumer rule)
-        batch = batch.persist()
-        try:
+        with batch_caches() as keep:
+            batch = keep(batch)
             # docs/ lands FIRST: a crash (or a concurrent reader)
             # between the two writes then sees a doc total WITHOUT the
             # batch's line counts — doc_permille deflates and the torn
@@ -92,23 +95,9 @@ def make_template_writer(
             docs = batch.groupBy(group_col).agg(
                 F.count(F.lit(1)).alias("n_docs")
             )
-            (
-                docs.withColumn("__batch_id", F.lit(batch_id).cast("long"))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__batch_id")
-                .parquet(f"{path}/docs")
-            )
+            land(docs, batch_id, f"{path}/docs")
             lines = _batch_line_counts(batch, group_col, text_col, sep)
-            (
-                lines.withColumn("__batch_id", F.lit(batch_id).cast("long"))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__batch_id")
-                .parquet(f"{path}/lines")
-            )
-        finally:
-            batch.unpersist()
+            land(lines, batch_id, f"{path}/lines")
 
     return write_batch
 
@@ -126,12 +115,7 @@ def continuous_templates(
     checkpoint); ``available_now=True`` drains the source and stops
     (the test/backfill trigger)."""
     write_batch = make_template_writer(path, group_col, text_col, sep)
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(stream, write_batch, checkpoint, available_now)
 
 
 def read_template_counts(
@@ -139,8 +123,8 @@ def read_template_counts(
 ) -> tuple[DataFrame | None, DataFrame | None]:
     """The MERGED (group, line, n_docs) and (group, n_docs) tables —
     one integer sum each over the per-batch partials."""
-    lines = _read_or_none(spark, f"{path}/lines")
-    docs = _read_or_none(spark, f"{path}/docs")
+    lines = read_table(spark, f"{path}/lines")
+    docs = read_table(spark, f"{path}/docs")
     if lines is None or docs is None:
         return None, None
     return (

@@ -17,10 +17,8 @@ Per micro-batch (foreachBatch):
 2. cross-store rejection: fingerprint the survivors, equi-join the
    store's distinct hashes, drop docs sharing >= ``min_shared``,
 3. accepted docs land in the corpus table, their fingerprints in the
-   store — both ``partitionBy('__batch_id')`` with dynamic partition
-   overwrite, and both reads exclude the in-flight batch id, so a
-   replayed batch overwrites exactly its own partitions (the same
-   idempotency contract as streaming/ingest.py).
+   store, under the stamped-partition contract of
+   ``streaming/sink.py``.
 
 Scale shape: the store carries (doc_id, fp_hash, pos) longs at
 ~2/(w+1) of the gram count — a small fraction of text bytes; the
@@ -33,6 +31,13 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from energy_pandas_spark.streaming.sink import (
+    batch_caches,
+    history,
+    land,
+    start,
+)
 
 __all__ = ["make_winnow_ingest_writer", "winnow_ingest", "read_fp_store"]
 
@@ -55,16 +60,15 @@ def make_winnow_ingest_writer(
         winnow_pairs,
     )
     from energy_pandas_spark.operators.graph import dedup_clusters
-    from energy_pandas_spark.streaming.ingest import _read_or_none
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        batch = batch.persist()
-        # fingerprint ONCE per batch: the pair detector, the
-        # cross-store check, and the store landing all reuse this
-        # (tokenize+md5+window-min is the batch's dominant CPU cost)
-        fps_all = winnow_fingerprints(batch, text_col, id_col, k, w).persist()
-        try:
+        with batch_caches() as keep:
+            batch = keep(batch)
+            # fingerprint ONCE per batch: the pair detector, the
+            # cross-store check, and the store landing all reuse this
+            # (tokenize+md5+window-min is the batch's dominant CPU cost)
+            fps_all = keep(winnow_fingerprints(batch, text_col, id_col, k, w))
             # 1. in-batch passage dedup (clusters, smallest id survives
             # — transitive: A copies B copies C collapses to one doc)
             pairs = winnow_pairs(
@@ -77,56 +81,27 @@ def make_winnow_ingest_writer(
                 .select(F.col("doc_id").alias(id_col))
             )
             fresh = batch.join(drops, id_col, "left_anti")
-            fp_fresh = fps_all.join(
-                fresh.select(id_col), id_col, "left_semi"
-            )
 
-            # 2. cross-store rejection, excluding any half-written copy
-            # of THIS batch (replay safety)
-            store = _read_or_none(spark, fps_path)
+            # 2. cross-store rejection
+            store = history(spark, fps_path, batch_id)
             if store is not None:
-                store_h = (
-                    store.filter(F.col("__batch_id") != batch_id)
-                    .select("fp_hash")
-                    .distinct()
-                )
                 hit = (
-                    fp_fresh.select(id_col, "fp_hash")
+                    fps_all.join(fresh.select(id_col), id_col, "left_semi")
+                    .select(id_col, "fp_hash")
                     .distinct()
-                    .join(store_h, "fp_hash")
+                    .join(store.select("fp_hash").distinct(), "fp_hash")
                     .groupBy(id_col)
                     .agg(F.count(F.lit(1)).alias("__shared"))
                     .filter(F.col("__shared") >= min_shared)
                 )
-                fresh = fresh.join(
-                    hit.select(id_col), id_col, "left_anti"
-                )
-            fresh = fresh.withColumn(
-                "__batch_id", F.lit(batch_id).cast("long")
-            ).persist()
+                fresh = fresh.join(hit.select(id_col), id_col, "left_anti")
+            fresh = keep(fresh)
 
-            # 3. idempotent landing: overwrite exactly this batch's
-            # partitions in both tables (the landed prints are the
-            # batch prints semi-joined to the accepted ids)
-            (
-                fresh.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__batch_id")
-                .parquet(corpus_path)
-            )
-            fps_out = fps_all.join(
-                fresh.select(id_col), id_col, "left_semi"
-            ).withColumn("__batch_id", F.lit(batch_id).cast("long"))
-            (
-                fps_out.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__batch_id")
-                .parquet(fps_path)
-            )
-            fresh.unpersist()
-        finally:
-            fps_all.unpersist()
-            batch.unpersist()
+            # 3. land the accepted docs, then their prints (the batch
+            # prints semi-joined to the accepted ids)
+            land(fresh, batch_id, corpus_path)
+            fps_out = fps_all.join(fresh.select(id_col), id_col, "left_semi")
+            land(fps_out, batch_id, fps_path)
 
     return write_batch
 
@@ -141,12 +116,7 @@ def winnow_ingest(
 ):
     """Start the ingest query; returns the StreamingQuery."""
     write_batch = make_winnow_ingest_writer(corpus_path, fps_path, **kwargs)
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(stream, write_batch, checkpoint, trigger_available_now)
 
 
 def read_fp_store(spark: SparkSession, fps_path: str) -> DataFrame:

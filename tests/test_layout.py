@@ -179,7 +179,7 @@ def test_compact_survives_crash_window(spark, tmp_path):
     import shutil
 
     from energy_pandas_spark.sources.layout import compact, write_clustered
-    from energy_pandas_spark.streaming.stats import _read_table
+    from energy_pandas_spark.streaming.sink import read_table as _read_table
 
     p = str(tmp_path / "t")
     df = spark.range(1000).withColumnRenamed("id", "k")

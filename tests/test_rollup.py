@@ -411,7 +411,7 @@ def test_read_table_corruption_does_not_wipe_history(spark, tmp_path):
     treated as 'never written' — that path swaps the history away."""
     import pytest as _pt
 
-    from energy_pandas_spark.streaming.stats import _read_table
+    from energy_pandas_spark.streaming.sink import read_table as _read_table
 
     p = str(tmp_path / "tbl")
     import os

@@ -115,7 +115,7 @@ def test_corrupt_store_raises_instead_of_double_ingesting(spark, tmp_path):
     data-less directory counts as an empty store."""
     import pytest as _pytest
 
-    from energy_pandas_spark.streaming.ingest import _read_or_none
+    from energy_pandas_spark.streaming.sink import read_table as _read_or_none
 
     # empty dir (crash after mkdir): legitimately no store
     empty = tmp_path / "empty_store"
