@@ -4,8 +4,37 @@ posture, one place instead of per-script copies.
 Local mode runs the same settings the cluster profile needs: AQE on
 (runtime shuffle-partition coalescing, skew-join splitting), a
 broadcast threshold sized for dimension tables, Arrow batching for the
-few pandas-backed kernels, dynamic partition overwrite for idempotent
-partition rewrites (streaming rollup), UTC session time.
+few pandas-backed kernels, dynamic partition overwrite as the default
+for partitioned ``mode("overwrite")`` writes, UTC session time, and a
+generated-code cache that holds the library's working set.
+
+Without a ``master``, the session runs ``local[N]`` with N the CPUs the
+process may run on (its affinity mask, so ``taskset`` and cpusets are
+respected), and N shuffle partitions unless ``shuffle_partitions`` is
+given.
+
+Generated-code cache. Spark keeps the classes whole-stage codegen
+compiles in one LRU cache of ``spark.sql.codegen.cache.maxEntries``
+entries (default 100). The library's working set is larger, counted
+with ``CodegenMetrics`` as the distinct classes one pass of each
+perfbench workload compiles: ``energy_batch`` 137, ``corpus_curation``
+about 205, ``interactive_energy`` about 210 for its query mix and
+``stream_rollup`` 69. A 100-entry cache evicts them in a cycle: every
+``energy_batch`` pass recompiled 109-127 classes (0.6-0.9 s of Janino)
+and ran them as cold code, with 8.5-14 s of JIT compiler time a pass
+against 3-7 s once cached; a pass took 8.7 s against 6.0 s (perfbench
+medians, 4 vCPUs). CODEGEN_CACHE_ENTRIES holds all four working sets
+at once with headroom; the classes average about 2 KB of bytecode, and
+metaspace read 162 MB at either size. Classes that inline per-call
+literals (the streaming rollup's batch id and days: 4 per merge batch)
+miss at any size and age out.
+
+Static settings (the cache size, ``spark.driver.memory``,
+``spark.sql.warehouse.dir`` ...) take effect only when ``make_session``
+starts the context: ``getOrCreate`` on a running one returns it with
+that context's values. The code cache is one per JVM and sized by the
+first session in it that generates code, so a session started after
+``stop()`` in the same Python process keeps the first one's size.
 
 At 100 TB the knobs that matter and their reasoning:
 - ``spark.sql.shuffle.partitions`` starts high (cluster: 2-4x total
@@ -29,6 +58,9 @@ from pyspark.sql import SparkSession
 
 __all__ = ["make_session"]
 
+# generated classes kept compiled; see the module docstring
+CODEGEN_CACHE_ENTRIES = 2000
+
 
 def make_session(
     master: str | None = None,
@@ -37,7 +69,10 @@ def make_session(
     driver_memory: str = "8g",
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.cpu_count() or 8
+    try:
+        cpus = len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        cpus = os.cpu_count() or 8
     builder = (
         SparkSession.builder.master(master or f"local[{cpus}]")
         .appName(app_name)
@@ -64,7 +99,10 @@ def make_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # partitioned mode("overwrite") writes replace only the
+        # partitions they write (the streaming sink sets this per write)
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", driver_memory)
     )
     for k, v in (extra_conf or {}).items():
