@@ -6,8 +6,10 @@ Design (see SURVEY.md):
 - ``EnergyFrame`` is a thin immutable facade over a lazy
   :class:`pyspark.sql.DataFrame` plus a driver-side per-column units dict.
 - All unit parsing / conversion-factor derivation happens on the driver
-  (:mod:`energy_pandas_spark.units`); the executors only ever see plain
-  Column arithmetic — no Python UDFs in the hot path.
+  (:mod:`energy_pandas_spark.units`); the executors see plain Column
+  arithmetic. Two operators run pandas kernels in Python workers
+  instead: the per-key EWMA (``mapInPandas``) and typical-period
+  clustering (``applyInPandas``).
 - Order-sensitive semantics (load-duration curves, period unstacking) use
   explicit index/timestamp columns + window functions, never implicit row
   order.

@@ -8,7 +8,7 @@ Algorithm (tsam ``TimeSeriesAggregation`` semantics, re-derived and
 verified against the golden value):
 
 1. ``timeStepsPerPeriod = hoursPerPeriod / resolution`` (resolution in
-   hours, inferred from the time grid).
+   hours, inferred from each series' own time grid).
 2. Unstack the series into period vectors; an incomplete final period is
    completed by APPENDING THE HEAD of the series (tsam's
    ``unstackToPeriods`` attaches the first ``missing`` steps).
@@ -27,8 +27,9 @@ Execution strategy: the whole pipeline runs inside ``applyInPandas``
 per group — a year of hourly data is 8,760 rows, trivially
 memory-resident — so a table of MANY series (one per building / meter /
 key column) clusters all groups in parallel across executors. This is
-the correct distribution axis: the algorithm is quadratic in periods
-within one series but embarrassingly parallel across series.
+the correct distribution axis: the algorithm is superlinear in periods
+within one series (O(P^2) memory, O(P^3) arithmetic) but embarrassingly
+parallel across series.
 """
 
 from __future__ import annotations
@@ -36,8 +37,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-
-from energy_pandas_spark.operators.reshape import infer_step_seconds
 
 __all__ = ["typical_periods_reconstruct", "discretize_frame", "discretize_grouped"]
 
@@ -47,49 +46,54 @@ __all__ = ["typical_periods_reconstruct", "discretize_frame", "discretize_groupe
 # ---------------------------------------------------------------------------
 
 
+def _sq_dists(X: np.ndarray) -> np.ndarray:
+    """Squared euclidean distances between the rows of ``X``, one row
+    at a time: the same sums as ``((X[:, None] - X[None]) ** 2).sum(2)``
+    without its (P, P, D) temporary: 26 ms against 78 ms at 365 x 96
+    on one core."""
+    d = np.empty((X.shape[0], X.shape[0]))
+    for i, x in enumerate(X):
+        d[i] = ((x - X) ** 2).sum(axis=1)
+    return d
+
+
 def _ward_labels(X: np.ndarray, n_clusters: int) -> np.ndarray:
     """Agglomerative hierarchical clustering, Ward linkage via the
-    Lance-Williams update. O(P^2) memory/time — P is the number of
-    periods in ONE series (365 for a year of days), never the table size.
+    Lance-Williams update on squared euclidean distances. P is the
+    number of periods in ONE series (365 for a year of days), never the
+    table size: O(P^2) memory and O(P^3) arithmetic (P - n_clusters
+    merges, each an argmin over the P x P matrix), in O(P) numpy calls.
+
+    Each merge picks the first minimum of the whole matrix in row-major
+    order, where retired clusters' rows and columns are ``inf``: the
+    same pair, ties included, as the first minimum over the active
+    submatrix. The merged cluster keeps the smaller index, and its
+    distances to the others are computed with the same floating-point
+    operations in the same order as the one-pair-at-a-time update.
     """
     P = X.shape[0]
     if n_clusters >= P:
         return np.arange(P)
-    # squared euclidean distances
-    sq = ((X[:, None, :] - X[None, :, :]) ** 2).sum(axis=2)
-    # Ward objective uses d^2/2 initially with unit sizes
-    d = sq.copy().astype(float)
+    d = _sq_dists(X)
     np.fill_diagonal(d, np.inf)
     sizes = np.ones(P)
-    active = list(range(P))
-    members: dict[int, list[int]] = {i: [i] for i in range(P)}
-    while len(active) > n_clusters:
-        # find closest pair among active
-        sub = d[np.ix_(active, active)]
-        k = np.argmin(sub)
-        ai, aj = divmod(k, len(active))
-        i, j = active[ai], active[aj]
-        if i > j:
-            i, j = j, i
+    alive = np.ones(P, dtype=bool)
+    root = np.arange(P)  # the cluster each period is in, by smallest member
+    for _ in range(P - n_clusters):
+        i, j = divmod(int(np.argmin(d)), P)  # i < j: d is symmetric
+        alive[j] = False
+        m = np.flatnonzero(alive)
+        m = m[m != i]  # the other active clusters
         # Lance-Williams Ward update: merge j into i
-        ni, nj = sizes[i], sizes[j]
-        for m in active:
-            if m in (i, j):
-                continue
-            nm = sizes[m]
-            d_new = (
-                (ni + nm) * d[i, m] + (nj + nm) * d[j, m] - nm * d[i, j]
-            ) / (ni + nj + nm)
-            d[i, m] = d[m, i] = d_new
+        ni, nj, nm = sizes[i], sizes[j], sizes[m]
+        d_new = ((ni + nm) * d[i, m] + (nj + nm) * d[j, m] - nm * d[i, j]) / (ni + nj + nm)
+        d[i, m] = d_new
+        d[m, i] = d_new
         sizes[i] = ni + nj
-        members[i].extend(members.pop(j))
-        active.remove(j)
+        root[root == j] = i
         d[j, :] = np.inf
         d[:, j] = np.inf
-    labels = np.empty(P, dtype=int)
-    for ci, root in enumerate(sorted(members)):
-        labels[np.array(members[root])] = ci
-    return labels
+    return np.unique(root, return_inverse=True)[1]
 
 
 def _medoids(X: np.ndarray, labels: np.ndarray) -> np.ndarray:
@@ -99,7 +103,7 @@ def _medoids(X: np.ndarray, labels: np.ndarray) -> np.ndarray:
     for c in sorted(set(labels)):
         idx = np.where(labels == c)[0]
         sub = X[idx]
-        dist = np.sqrt(((sub[:, None, :] - sub[None, :, :]) ** 2).sum(axis=2))
+        dist = np.sqrt(_sq_dists(sub))
         reps.append(sub[np.argmin(dist.sum(axis=1))])
     return np.asarray(reps)
 
@@ -196,14 +200,25 @@ def discretize_grouped(
 ) -> DataFrame:
     """Scale path: one typical-period aggregation PER GROUP, all groups
     in parallel (Arrow-batched ``applyInPandas``; each group must fit in
-    executor memory — 8,760x8B floats per year-series is trivial)."""
-    if resolution_hours is None:
-        resolution_hours = infer_step_seconds(df, ts_col) / 3600.0
-    spp = int(round(hoursPerPeriod / resolution_hours))
+    executor memory — 8,760x8B floats per year-series is trivial).
+
+    Without ``resolution_hours`` each group's step is the spacing of its
+    own two earliest distinct timestamps (as ``infer_step_seconds`` does
+    for a whole frame), so groups on different grids each get their own
+    period length; a group with fewer than 2 timestamps raises at the
+    action."""
     schema = df.select(group_col, ts_col, *value_cols).schema
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(ts_col).reset_index(drop=True)
+        if resolution_hours is None:
+            ts = pdf[ts_col].dropna().drop_duplicates()
+            if len(ts) < 2:
+                raise ValueError("cannot infer step from fewer than 2 rows")
+            step_hours = int((ts.iloc[1] - ts.iloc[0]).total_seconds()) / 3600.0
+        else:
+            step_hours = resolution_hours
+        spp = int(round(hoursPerPeriod / step_hours))
         vals = pdf[value_cols].to_numpy(dtype=float)
         recon = typical_periods_reconstruct(
             vals, spp, noTypicalPeriods, rescale=rescale

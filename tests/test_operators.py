@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from energy_pandas_spark import EnergyFrame
 from energy_pandas_spark.operators.clustering import (
+    _ward_labels,
     discretize_grouped,
     typical_periods_reconstruct,
 )
@@ -21,7 +22,61 @@ from energy_pandas_spark.sources.reportdata import (
 )
 
 
+def _ward_labels_loop(X: np.ndarray, n_clusters: int) -> np.ndarray:
+    """The one-pair-at-a-time Ward merge loop that ``_ward_labels``
+    replaced, kept as its reference."""
+    P = X.shape[0]
+    if n_clusters >= P:
+        return np.arange(P)
+    sq = ((X[:, None, :] - X[None, :, :]) ** 2).sum(axis=2)
+    d = sq.copy().astype(float)
+    np.fill_diagonal(d, np.inf)
+    sizes = np.ones(P)
+    active = list(range(P))
+    members: dict[int, list[int]] = {i: [i] for i in range(P)}
+    while len(active) > n_clusters:
+        sub = d[np.ix_(active, active)]
+        k = np.argmin(sub)
+        ai, aj = divmod(k, len(active))
+        i, j = active[ai], active[aj]
+        if i > j:
+            i, j = j, i
+        ni, nj = sizes[i], sizes[j]
+        for m in active:
+            if m in (i, j):
+                continue
+            nm = sizes[m]
+            d_new = (
+                (ni + nm) * d[i, m] + (nj + nm) * d[j, m] - nm * d[i, j]
+            ) / (ni + nj + nm)
+            d[i, m] = d[m, i] = d_new
+        sizes[i] = ni + nj
+        members[i].extend(members.pop(j))
+        active.remove(j)
+        d[j, :] = np.inf
+        d[:, j] = np.inf
+    labels = np.empty(P, dtype=int)
+    for ci, root in enumerate(sorted(members)):
+        labels[np.array(members[root])] = ci
+    return labels
+
+
 class TestClustering:
+    def test_ward_labels_match_the_merge_loop(self):
+        # a third of the inputs rounded to 1 decimal, so that many
+        # pairs tie and the pick order among ties is checked too
+        rng = np.random.default_rng(20261019)
+        sizes = [2, 3, 400] + [int(p) for p in rng.integers(4, 400, size=27)]
+        for case, P in enumerate(sizes):
+            X = rng.random((P, int(rng.integers(1, 48))))
+            if case % 3 == 0:
+                X = np.round(X, 1)
+            n_clusters = int(rng.integers(1, 13))
+            want = _ward_labels_loop(X, n_clusters)
+            got = _ward_labels(X, n_clusters)
+            assert got.dtype == want.dtype
+            np.testing.assert_array_equal(got, want, err_msg=f"P={P} n_clusters={n_clusters}")
+
     def test_tsam_golden_value(self):
         # reference golden: range(100) hourly, 1 typical period ->
         # sum 4235.070422535211 (test_energypandas.py:167-173)
@@ -54,6 +109,42 @@ class TestClustering:
         sums = {r["g"]: r["s"] for r in out.groupBy("g").agg(F.sum("v").alias("s")).collect()}
         assert abs(sums["a"] - 4235.070422535211) < 1e-3
         assert abs(sums["b"] - 2 * 4235.070422535211) < 1e-3
+
+    def test_discretize_grouped_infers_each_groups_step(self, spark):
+        # two hourly meters on grids 30 minutes apart: each is clustered
+        # in 24-step days, exactly as when it is discretized alone
+        from datetime import datetime, timedelta
+
+        t0 = datetime(2024, 1, 1)
+        rows = [
+            (g, t0 + timedelta(minutes=off + 60 * i), float((i * 7 + g_i) % 11 + i / 50))
+            for g_i, (g, off) in enumerate((("a", 0), ("b", 30)))
+            for i in range(24 * 6)
+        ]
+        df = spark.createDataFrame(rows, "g string, ts timestamp, v double")
+        sc = spark.sparkContext
+        sc.setJobGroup("discretize-build", "discretize-build")
+        try:
+            both = discretize_grouped(df, "g", "ts", ["v"], noTypicalPeriods=2)
+        finally:
+            sc.setJobGroup("", "")
+        for g in ("a", "b"):
+            one = df.filter(F.col("g") == g)
+            solo = discretize_grouped(one, "g", "ts", ["v"], noTypicalPeriods=2)
+            got = both.filter(F.col("g") == g).orderBy("ts").select("v").toPandas()["v"]
+            want = solo.orderBy("ts").select("v").toPandas()["v"]
+            np.testing.assert_array_equal(got.to_numpy(), want.to_numpy(), err_msg=g)
+        # the steps are inferred in the kernel: building runs no job
+        assert not sc.statusTracker().getJobIdsForGroup("discretize-build")
+
+    def test_discretize_grouped_one_timestamp_group_fails_at_action(self, spark):
+        rows = [("a", 3600 * i, float(i % 5)) for i in range(48)] + [("b", 0, 3.0)]
+        df = spark.createDataFrame(rows, "g string, t long, v double").selectExpr(
+            "g", "timestamp_seconds(t) AS ts", "v"
+        )
+        out = discretize_grouped(df, "g", "ts", ["v"], noTypicalPeriods=1)
+        with pytest.raises(Exception, match="cannot infer step from fewer than 2 rows"):
+            out.collect()
 
 
 class TestReshape:

@@ -106,21 +106,27 @@ CHILD = textwrap.dedent(
 REPLAN_COMPILES = 20
 
 
-@pytest.mark.skipif(
+needs_two_cpus = pytest.mark.skipif(
     not hasattr(os, "sched_setaffinity") or len(os.sched_getaffinity(0)) < 2,
     reason="needs CPU affinity and at least 2 CPUs",
 )
+
+
+def _with_root_on_pythonpath() -> dict:
+    return {**os.environ, "PYTHONPATH": os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)}
+
+
+@needs_two_cpus
 def test_repeated_pipeline_reuses_generated_code_and_sizes_to_affinity(tmp_path):
     """A second pass of the energy_batch chain recompiles none of the
     generated code of the first (a 100-entry cache recompiled most of
     its classes every pass), and a session without ``master`` sizes
     itself to the 2 CPUs the child is pinned to, not to the host's CPU
     count."""
-    env = {**os.environ, "PYTHONPATH": os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)}
     proc = subprocess.run(
         [sys.executable, "-c", CHILD, str(tmp_path)],
         cwd=str(tmp_path),
-        env=env,
+        env=_with_root_on_pythonpath(),
         capture_output=True,
         text=True,
         timeout=300,
@@ -132,3 +138,113 @@ def test_repeated_pipeline_reuses_generated_code_and_sizes_to_affinity(tmp_path)
     assert second <= REPLAN_COMPILES, got
     assert got["master"] == "local[2]", got
     assert got["shuffle_partitions"] == "2", got
+
+
+# Reports, for each of 8 tasks on 2 cores, the module of the zip cache
+# invalidation the worker runs and whether the modules added with
+# addPyFile import; twice, adding a .py and a .zip module between the
+# runs. In mode "hidden" the driver imports the package from a
+# directory the workers do not search, and runs windows.ewma.
+DAEMON_CHILD = textwrap.dedent(
+    """
+    import json, os, sys, zipfile
+    mode, tmp, root = sys.argv[1:4]
+    if mode == "hidden":
+        sys.path.insert(0, root)
+    os.sched_setaffinity(0, sorted(os.sched_getaffinity(0))[:2])
+
+    from energy_pandas_spark import make_session
+
+    conf = {"spark.ui.enabled": "false", "spark.sql.warehouse.dir": os.path.join(tmp, "warehouse")}
+    if mode == "override":
+        conf["spark.python.daemon.module"] = "pyspark.daemon"
+    spark = make_session(driver_memory="1g", extra_conf=conf)
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+
+    def probe(it):
+        import importlib, zipimport
+        import pandas as pd
+
+        for pdf in it:
+            row = {"daemon": zipimport.zipimporter.invalidate_caches.__module__}
+            for name in ("eps_added_py", "eps_added_zip"):
+                try:
+                    row[name] = importlib.import_module(name).VALUE
+                except ImportError:
+                    row[name] = None
+            yield pd.DataFrame([row])
+
+    def run():
+        df = spark.range(0, 8, numPartitions=8)
+        out = df.mapInPandas(probe, "daemon string, eps_added_py string, eps_added_zip string")
+        return [r.asDict() for r in out.collect()]
+
+    runs = [run()]
+    with open(os.path.join(tmp, "eps_added_py.py"), "w") as f:
+        f.write("VALUE = 'py'\\n")
+    with zipfile.ZipFile(os.path.join(tmp, "eps_added_zip.zip"), "w") as z:
+        z.writestr("eps_added_zip.py", "VALUE = 'zip'\\n")
+    sc.addPyFile(os.path.join(tmp, "eps_added_py.py"))
+    sc.addPyFile(os.path.join(tmp, "eps_added_zip.zip"))
+    runs.append(run())
+    got = {"runs": runs, "conf": sc.getConf().get("spark.python.daemon.module")}
+    if mode == "hidden":
+        from energy_pandas_spark.operators import windows
+
+        kwh = spark.createDataFrame(
+            [(m, i, float(i % 5 + k)) for k, m in enumerate("ab") for i in range(50)],
+            "Name string, ts long, value double",
+        )
+        got["ewma_rows"] = windows.ewma(kwh, "ts", "value", 0.2, by="Name").count()
+    print(json.dumps(got))
+    spark.stop()
+    """
+)
+
+
+def _daemon_child(tmp_path, mode: str) -> dict:
+    env = _with_root_on_pythonpath()
+    if mode == "hidden":
+        del env["PYTHONPATH"]
+    proc = subprocess.run(
+        [sys.executable, "-c", DAEMON_CHILD, mode, str(tmp_path), ROOT],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+@needs_two_cpus
+def test_workers_keep_zip_caches_and_still_see_added_files(tmp_path):
+    """make_session's workers run the library's zip cache invalidation
+    in every task, reused workers included, and a .py and a .zip module
+    added with addPyFile after the workers started still import."""
+    got = _daemon_child(tmp_path, "default")
+    first, second = got["runs"]
+    assert len(first) == len(second) == 8, got
+    assert {r["daemon"] for r in first + second} == {"energy_pandas_spark._daemon"}, got
+    assert {(r["eps_added_py"], r["eps_added_zip"]) for r in first} == {(None, None)}, got
+    assert {(r["eps_added_py"], r["eps_added_zip"]) for r in second} == {("py", "zip")}, got
+
+
+@needs_two_cpus
+def test_worker_daemon_is_overridable(tmp_path):
+    """extra_conf restores pyspark's own daemon."""
+    got = _daemon_child(tmp_path, "override")
+    assert got["conf"] == "pyspark.daemon", got
+    assert {r["daemon"] for r in got["runs"][0]} == {"zipimport"}, got
+
+
+@needs_two_cpus
+def test_workers_that_cannot_import_the_package_keep_the_default_daemon(tmp_path):
+    """A driver that imports the package from a directory the workers do
+    not search gets Spark's default daemon, and its pandas kernels run."""
+    got = _daemon_child(tmp_path, "hidden")
+    assert got["conf"] is None, got
+    assert {r["daemon"] for r in got["runs"][0]} == {"zipimport"}, got
+    assert got["ewma_rows"] == 100, got
