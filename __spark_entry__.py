@@ -11645,9 +11645,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDER MATTERS: the driver hash-checks the first ~50 entries per
-    # round, so registry order IS the verification-rotation policy
-    # (scripts/rotation_report.py; enforced by tests/test_rotation.py).
+    # The order is historical and kept as it is: it was the last
+    # verification window of an external driver that hash-checked the
+    # first ~50 entries per round. Nothing in the repo reads it.
     # Round-8 window (VERDICT r7 #2): ORACLE-BACKED slots only — the
     # production driver has no rows-only check path, so the 13
     # rows-only queries headed in r7 came back err=no_oracle with zero

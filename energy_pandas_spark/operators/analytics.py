@@ -9,23 +9,21 @@ Scale notes (100 TB design):
   single-partition window).
 - ``ldc`` (load-duration curve) needs a global descending rank. A naive
   ``row_number() OVER (ORDER BY v DESC)`` collapses to ONE partition, so
-  the default implementation range-partitions by the sort key, sorts
+  ``global_order_index`` range-partitions by the sort key, sorts
   within partitions, and assigns contiguous global indexes from
-  per-partition row counts (two jobs, every stage distributed). The
-  window variant is kept for small inputs.
+  per-partition row counts (two jobs, every stage distributed).
 - ``monthly`` is a plain hash aggregation on a truncated timestamp —
   partial aggregation map-side, one shuffle on the (low-cardinality)
   month key.
 """
 
 from __future__ import annotations
-from energy_pandas_spark.util import track_cache
 
 from typing import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from ..util import epoch_micros
+from ..util import attach_caches, epoch_micros
 
 __all__ = [
     "dedup_bursts",
@@ -122,75 +120,20 @@ def ldc(
     value_col: str,
     index_name: str = "idx",
     keep_cols: Iterable[str] = (),
-    method: str = "distributed",
 ) -> DataFrame:
     """Load-duration curve: values sorted descending with a fresh 0..n-1
     index (reference ``EnergySeries.ldc``: ``sort_values(ascending=False)
     .reset_index(drop=True)``, energypandas.py:641-644).
 
-    ``method='distributed'`` (default): range-partition on the sort key,
-    sort within partitions, then assign global contiguous indexes by
-    offsetting per-partition ``row_number`` with the cumulative counts of
-    the preceding partitions (computed in a tiny second job and joined
-    back via broadcast). Every stage is distributed; no single-partition
-    window.
-
-    ``method='window'``: single ``row_number`` window — exact same
-    result, simpler plan, only for small inputs.
-    """
-    cols = [value_col, *keep_cols]
-    base = df.select(*cols)
-    if method == "window":
-        w = Window.orderBy(F.desc_nulls_last(value_col))
-        return base.select(
-            (F.row_number().over(w) - 1).alias(index_name), *cols
-        )
-
-    # Range-partition on the sort key, sort within partitions, then tag
-    # rows with monotonically_increasing_id: within a partition the id is
-    # (pid << 33) + a consecutive counter in row order, so it encodes
-    # BOTH the partition and the local rank — no per-pid window, no
-    # second shuffle of the data. The projection is persisted because
-    # repartitionByRange samples its boundaries (nondeterministic across
-    # re-evaluations) and the offsets branch must see the SAME layout.
-    # MEMORY_AND_DISK_DESER (not MEMORY-only cache): the pinned dataset
-    # is the FULL sorted projection — at 100 TB it exceeds executor
-    # storage memory, and an evicted MEMORY_ONLY block would silently
-    # recompute with fresh (different) range boundaries, corrupting the
-    # offsets join. Disk spill keeps the layout stable at any scale.
-    from pyspark import StorageLevel
-
-    part = (
-        base.repartitionByRange(F.desc_nulls_last(value_col))
-        .sortWithinPartitions(F.desc_nulls_last(value_col))
-        .withColumn("__mid", F.monotonically_increasing_id())
-        .withColumn("__pid", F.shiftright("__mid", 33))
-        .withColumn("__rn", F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1)))
-        .select(*cols, "__pid", "__rn")
-        .persist(StorageLevel.MEMORY_AND_DISK_DESER)
+    The index comes from :func:`global_order_index`: the data never
+    passes through a single partition, only its per-partition counts
+    do. The sorted projection it persists is attached to the result;
+    callers release it via ``util.release_caches``."""
+    return global_order_index(
+        df.select(value_col, *keep_cols),
+        [F.desc_nulls_last(value_col)],
+        index_name,
     )
-    # per-partition counts -> cumulative offsets (tiny: one row/partition)
-    offsets = (
-        part.groupBy("__pid")
-        .count()
-        .select(
-            F.col("__pid"),
-            F.sum("count")
-            .over(Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1))
-            .alias("__offset"),
-        )
-        .fillna({"__offset": 0})
-    )
-    out = part.join(F.broadcast(offsets), "__pid").select(
-        (F.col("__offset") + F.col("__rn")).alias(index_name), *cols
-    )
-    # release handle (ADVICE r6 pattern): the persisted sorted projection
-    # otherwise outlives the call — pinned executor memory for the
-    # session and a warm-cache substitution hazard for later queries
-    # with a matching plan. Callers release via util.release_caches.
-    from energy_pandas_spark.util import attach_caches
-
-    return attach_caches(out, part)
 
 
 def ldc_source(
@@ -1023,9 +966,16 @@ def global_order_index(
     id`` offset by broadcast cumulative partition counts. No
     single-partition window anywhere; the sorted projection persists
     spill-safe because ``repartitionByRange`` samples its boundaries
-    and both consumers must see one layout."""
+    and both consumers must see one layout. The persist is attached to
+    the result; callers release it via ``util.release_caches``."""
     from pyspark import StorageLevel
 
+    # Within a partition monotonically_increasing_id is (pid << 33) + a
+    # consecutive counter in row order, so it encodes both the partition
+    # and the local rank: no per-pid window, no second shuffle. A
+    # MEMORY_ONLY block evicted under pressure would recompute with
+    # fresh range boundaries and corrupt the offsets join; spilling to
+    # disk keeps the layout stable at any scale.
     cols = df.columns
     part = (
         df.repartitionByRange(*sort_cols)
@@ -1036,7 +986,6 @@ def global_order_index(
         .select(*cols, "__pid", "__rn")
         .persist(StorageLevel.MEMORY_AND_DISK_DESER)
     )
-    track_cache(part)
     offsets = (
         part.groupBy("__pid")
         .count()
@@ -1052,9 +1001,10 @@ def global_order_index(
         )
         .fillna({"__off": 0})
     )
-    return part.join(F.broadcast(offsets), "__pid").select(
+    out = part.join(F.broadcast(offsets), "__pid").select(
         (F.col("__off") + F.col("__rn")).alias(index_name), *cols
     )
+    return attach_caches(out, part)
 
 
 def spearman_corr(

@@ -124,9 +124,10 @@ def typical_periods_reconstruct(
         values = values[:, None]
     n, k = values.shape
     spp = steps_per_period
-    # 2. complete the last period with the head of the series
+    # 2. complete the last period with the head of the series, repeated
+    # cyclically when the series is shorter than the gap
     missing = (-n) % spp
-    padded = np.vstack([values, values[:missing]]) if missing else values
+    padded = np.vstack([values, values[np.arange(missing) % n]])
     P = padded.shape[0] // spp
     # 3. min-max normalize per column
     lo = values.min(axis=0)

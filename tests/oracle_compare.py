@@ -1,9 +1,8 @@
 """ONE copy of the driver-gate replica: DuckDB view setup plus the
 type-strict column/row/value compare. Shared by the sf-scalable gate
-(test_entry.py), the pinned sf0.01 leg (test_entry_sf01.py) and the
-on-demand dry-run (scripts/driver_dryrun.py) so the three legs cannot
-drift — e.g. a new source table or a compare-semantics change (the
-tz-aware-oracle guard) lands in every leg at once.
+(test_entry.py) and the pinned sf0.01 leg (test_entry_sf01.py) so the
+two legs cannot drift — e.g. a new source table or a compare-semantics
+change (the tz-aware-oracle guard) lands in both legs at once.
 """
 
 from __future__ import annotations
@@ -25,9 +24,9 @@ def ddb_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
 
     con = duckdb.connect()
     for t in TABLE_NAMES:
-        # driver testdata ships <table>.parquet as a single FILE; the
-        # locally-generated scale probes are Spark-written DIRECTORIES
-        # of part files — glob accordingly so both layouts register
+        # driver testdata ships <table>.parquet as a single FILE; a
+        # Spark-written table is a DIRECTORY of part files — glob
+        # accordingly so both layouts register
         path = f"{sf_dir}/{t}.parquet"
         if os.path.isdir(path):
             path = f"{path}/*.parquet"

@@ -146,6 +146,24 @@ class TestClustering:
         with pytest.raises(Exception, match="cannot infer step from fewer than 2 rows"):
             out.collect()
 
+    @pytest.mark.parametrize("n", [4, 10])
+    def test_series_shorter_than_half_a_period(self, n):
+        # the head is repeated to complete the period, not cut short
+        r = typical_periods_reconstruct(np.arange(n, dtype=float), 24, 2)
+        assert r.shape == (n, 1)
+        assert np.isfinite(r).all()
+
+    def test_discretize_grouped_short_group(self, spark):
+        rows = [("a", 3600 * i, float(i % 5)) for i in range(48)] + [
+            ("b", 3600 * i, float(i)) for i in range(4)
+        ]
+        df = spark.createDataFrame(rows, "g string, t long, v double").selectExpr(
+            "g", "timestamp_seconds(t) AS ts", "v"
+        )
+        out = discretize_grouped(df, "g", "ts", ["v"], noTypicalPeriods=2).toPandas()
+        assert out.groupby("g").size().to_dict() == {"a": 48, "b": 4}
+        assert np.isfinite(out["v"]).all()
+
 
 class TestReshape:
     def test_unstack(self, spark):
@@ -384,15 +402,31 @@ class TestZscore:
 
 class TestLdcScale:
     def test_distributed_matches_window(self, spark):
+        from pyspark.sql import Window
+
         df = spark.range(5000).select(
             (F.hash("id") % 1000).cast("double").alias("v")
         )
-        a = analytics.ldc(df, "v", method="distributed").collect()
-        b = analytics.ldc(df, "v", method="window").collect()
+        a = analytics.ldc(df, "v").collect()
+        # oracle: one row_number window over the whole frame
+        w = Window.orderBy(F.desc_nulls_last("v"))
+        b = df.select((F.row_number().over(w) - 1).alias("idx"), "v").collect()
         assert [r["v"] for r in sorted(a, key=lambda r: r["idx"])] == [
             r["v"] for r in sorted(b, key=lambda r: r["idx"])
         ]
         assert sorted(r["idx"] for r in a) == list(range(5000))
+
+    def test_global_order_index_releases_its_persist(self, spark):
+        from energy_pandas_spark.util import release_caches
+
+        spark.catalog.clearCache()
+        df = spark.range(200).select((F.col("id") % 7).alias("v"), "id")
+        out = analytics.global_order_index(df, [F.desc("v"), F.asc("id")])
+        assert out.count() == 200
+        jcm = spark._jsparkSession.sharedState().cacheManager()
+        assert not jcm.isEmpty()
+        release_caches(out)
+        assert jcm.isEmpty()
 
 
 def test_ewma_matches_pandas(spark):
@@ -1038,7 +1072,7 @@ def test_eager_false_attaches_releasable_caches(spark):
 
     # isolate from persists leaked by earlier tests in the shared
     # session: this test asserts cacheManager emptiness, which is only
-    # meaningful from a clean slate (the leak-audit script owns the
+    # meaningful from a clean slate (tests/test_entry.py owns the
     # "no operator leaks" property; this test owns the release handle)
     spark.catalog.clearCache()
 
