@@ -10727,22 +10727,19 @@ def rrf_fuse_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager=False scorers share ONE matched-postings InMemoryRelation
     # (identical logical plans dedupe in the CacheManager) instead of
     # each building and releasing its own; the (queries x 5)-row fused
-    # result materializes eagerly so every cache can be RELEASED
+    # result materializes eagerly so the block can RELEASE every cache
     # before returning — a leaked persist substitutes into later
     # same-plan queries via the logical-plan cache (observed breaking
     # an unrelated plan-lock test).
-    from energy_pandas_spark.util import release_caches
+    from energy_pandas_spark.util import owned_caches
 
-    postings = build_postings(docs).persist()
-    postings.count()
-    tf_ranked = search_topk(docs, q, k=10, postings=postings, eager=False)
-    bm_ranked = bm25_topk(docs, q, k=10, postings=postings, eager=False)
-    fused = rrf_fuse([tf_ranked, bm_ranked], k=5)
-    out = fused.orderBy("query_id", "rank").localCheckpoint(eager=True)
-    release_caches(tf_ranked)
-    release_caches(bm_ranked)
-    postings.unpersist()
-    return out
+    with owned_caches() as own:
+        postings = own(build_postings(docs))
+        postings.count()
+        tf_ranked = search_topk(docs, q, k=10, postings=postings, eager=False)
+        bm_ranked = bm25_topk(docs, q, k=10, postings=postings, eager=False)
+        fused = rrf_fuse([tf_ranked, bm_ranked], k=5)
+        return fused.orderBy("query_id", "rank").localCheckpoint(eager=True)
 
 
 _RRF_FUSE_SQL = rf"""

@@ -26,7 +26,7 @@
 """
 
 from __future__ import annotations
-from energy_pandas_spark.util import track_cache
+from energy_pandas_spark.util import attach_caches, owned_caches, track_cache
 
 from typing import Iterator
 
@@ -467,10 +467,10 @@ def minhash_lsh_candidates(
     reference it multiple times (id extraction + per-side verify
     joins); candidates are tiny relative to the corpus.
 
-    Cache ownership: the returned frame is persisted and the CALLER
-    owns release (``.unpersist()`` after the verify materializes).
-    The in-module verify pipelines (``minhash_lsh_pairs`` etc.)
-    release it on their default ``eager=True`` path."""
+    Cache ownership: the persist is registered with the innermost
+    ``util.owned_caches`` block (the root list outside every block);
+    the in-module verify pipelines (``minhash_lsh_pairs`` etc.) run in
+    such a block and release it on their default ``eager=True`` path."""
     banded = _banded_buckets(
         df, text_col, id_col, num_hashes, bands, shingle_size, seed, kind
     )
@@ -519,42 +519,6 @@ def _restricted_to_candidates(
     return df.join(cand_ids, id_col, "left_semi")
 
 
-def _release_caches(out: DataFrame, *caches: DataFrame) -> DataFrame:
-    """retrieval._finish's cache-hygiene pattern for the dedup verify
-    pipelines: materialize the pairs-sized result eagerly
-    (localCheckpoint truncates the lineage off the persisted inputs)
-    and RELEASE the caches — a leaked persist pins executor memory for
-    the session AND substitutes into any later query whose logical
-    plan matches (Spark swaps in the InMemoryRelation), which made
-    full-registry plan audits registry-order-dependent (ADVICE r5).
-
-    Fault-tolerance caveat (ADVICE r6): ``localCheckpoint`` stores the
-    blocks on executors and TRUNCATES lineage, so on a real cluster
-    with dynamic allocation / executor loss the checkpointed result is
-    unrecoverable — the job fails instead of recomputing. That is a
-    deliberate trade here: the checkpointed frame is the PAIRS-sized
-    verify output (bounded by ``max_bucket``, orders of magnitude
-    smaller than the corpus), executed at call time, so the exposure
-    window is the caller's immediate consumption, not a long-lived
-    plan. Pipelines that need full lineage-based recovery (or lazy
-    composition) should pass ``eager=False`` and release the internal
-    persists themselves via :func:`release_caches`."""
-    out = out.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
-    return out
-
-
-# ``eager=False`` twin of _release_caches + the caller-side release
-# handle (ADVICE r6) — canonical implementations live in util so
-# retrieval/text share them without import cycles; re-exported here
-# because the dedup pipelines are the primary eager= surface.
-from energy_pandas_spark.util import (  # noqa: E402
-    attach_caches as _attach_caches,
-    release_caches,
-)
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -574,76 +538,75 @@ def minhash_lsh_pairs(
 
     ``eager=True`` (default) materializes the verified pairs and
     releases the internal shingle/candidate caches before returning;
-    ``eager=False`` returns the lazy plan — the caller then owns
-    unpersisting (plan-inspection/tests use this)."""
-    cand = minhash_lsh_candidates(
-        df, text_col, id_col, num_hashes, bands, shingle_size, max_bucket
-    )
-    sh = _shingle_sets(
-        _restricted_to_candidates(df, cand, id_col),
-        text_col, id_col, shingle_size,
-    )
-    # exact integer verify: shingle arrays are distinct sets, so
-    # intersection/union sizes are exact longs. The threshold test and
-    # the emitted similarity both run in pure integer arithmetic —
-    # `round(i/u, 6) >= t` is NOT engine-portable when i/u lands on an
-    # exact decimal half (round-at-tie, the r5 sf1 class), and a tie at
-    # the threshold would flip pair MEMBERSHIP, not just a value.
-    t_micro = int(round(threshold * 1_000_000))
-    # the candidate shingle table feeds BOTH verify sides — persist and
-    # materialize EAGERLY. Besides running the semi-join + shingling
-    # once instead of twice, the materialized cache gives Catalyst the
-    # TRUE size of this array-payload side: its static estimate through
-    # the lazy semi-join is low enough that at 100x bench scale it
-    # compiled both verify joins as driver-side BROADCASTS of multi-KB
-    # array rows (the sf10 probe's broadcast OOM in
-    # minhash_keep_best_drop). With accurate stats the planner
-    # broadcasts only when the candidate set genuinely fits and
-    # shuffle-joins at scale.
-    from pyspark import StorageLevel
+    ``eager=False`` returns the lazy plan with those caches attached
+    (``util.release_caches``) and handed to the enclosing
+    ``util.owned_caches`` block (plan-inspection/tests use this). The
+    other dual-mode operators here follow the same rule."""
+    with owned_caches() as own:
+        cand = minhash_lsh_candidates(
+            df, text_col, id_col, num_hashes, bands, shingle_size, max_bucket
+        )
+        sh = _shingle_sets(
+            _restricted_to_candidates(df, cand, id_col),
+            text_col, id_col, shingle_size,
+        )
+        # exact integer verify: shingle arrays are distinct sets, so
+        # intersection/union sizes are exact longs. The threshold test and
+        # the emitted similarity both run in pure integer arithmetic —
+        # `round(i/u, 6) >= t` is NOT engine-portable when i/u lands on an
+        # exact decimal half (round-at-tie, the r5 sf1 class), and a tie at
+        # the threshold would flip pair MEMBERSHIP, not just a value.
+        t_micro = int(round(threshold * 1_000_000))
+        # the candidate shingle table feeds BOTH verify sides — persist and
+        # materialize EAGERLY. Besides running the semi-join + shingling
+        # once instead of twice, the materialized cache gives Catalyst the
+        # TRUE size of this array-payload side: its static estimate through
+        # the lazy semi-join is low enough that at 100x bench scale it
+        # compiled both verify joins as driver-side BROADCASTS of multi-KB
+        # array rows (the sf10 probe's broadcast OOM in
+        # minhash_keep_best_drop). With accurate stats the planner
+        # broadcasts only when the candidate set genuinely fits and
+        # shuffle-joins at scale.
+        from pyspark import StorageLevel
 
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-    sh.count()
-    verified = (
-        cand.join(
-            sh.withColumnsRenamed({id_col: "id_a", "__sh": "sh_a"}),
-            "id_a",
-        )
-        .join(
-            sh.withColumnsRenamed({id_col: "id_b", "__sh": "sh_b"}),
-            "id_b",
-        )
-        .withColumn(
-            "__i", F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
-        )
-        .withColumn("__u", F.size(F.array_union("sh_a", "sh_b")).cast("long"))
-        .filter(
-            F.when(
-                F.col("__u") == 0, F.lit(0) >= F.lit(t_micro)
-            ).otherwise(
-                F.col("__i") * F.lit(1_000_000)
-                >= F.lit(t_micro) * F.col("__u")
+        sh = own(sh, StorageLevel.MEMORY_AND_DISK_DESER)
+        sh.count()
+        verified = (
+            cand.join(
+                sh.withColumnsRenamed({id_col: "id_a", "__sh": "sh_a"}),
+                "id_a",
             )
+            .join(
+                sh.withColumnsRenamed({id_col: "id_b", "__sh": "sh_b"}),
+                "id_b",
+            )
+            .withColumn(
+                "__i", F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
+            )
+            .withColumn("__u", F.size(F.array_union("sh_a", "sh_b")).cast("long"))
+            .filter(
+                F.when(
+                    F.col("__u") == 0, F.lit(0) >= F.lit(t_micro)
+                ).otherwise(
+                    F.col("__i") * F.lit(1_000_000)
+                    >= F.lit(t_micro) * F.col("__u")
+                )
+            )
+            .withColumn(
+                "jaccard",
+                F.when(F.col("__u") == 0, F.lit(0.0)).otherwise(
+                    F.round(F.col("__i") / F.col("__u"), 6)
+                ),
+            )
+            .withColumn(
+                "jaccard_micro",
+                F.when(F.col("__u") == 0, F.lit(0).cast("long")).otherwise(
+                    F.expr("(__i * 1000000L) div __u")
+                ),
+            )
+            .select("id_a", "id_b", "jaccard", "jaccard_micro")
         )
-        .withColumn(
-            "jaccard",
-            F.when(F.col("__u") == 0, F.lit(0.0)).otherwise(
-                F.round(F.col("__i") / F.col("__u"), 6)
-            ),
-        )
-        .withColumn(
-            "jaccard_micro",
-            F.when(F.col("__u") == 0, F.lit(0).cast("long")).otherwise(
-                F.expr("(__i * 1000000L) div __u")
-            ),
-        )
-        .select("id_a", "id_b", "jaccard", "jaccard_micro")
-    )
-    return (
-        _release_caches(verified, sh, cand)
-        if eager
-        else _attach_caches(verified, sh, cand)
-    )
+        return own.result(verified, eager)
 
 
 def edit_distance_pairs(
@@ -670,45 +633,40 @@ def edit_distance_pairs(
     if prefix_len is not None:
         key = F.substring(key, 1, prefix_len)
     keyed = df.select(F.col(id_col), key.alias("__k"))
-    cand = None
-    if method == "exact":
-        a = keyed.select(F.col(id_col).alias("id_a"), F.col("__k").alias("k_a"))
-        b = keyed.select(F.col(id_col).alias("id_b"), F.col("__k").alias("k_b"))
-        paired = a.join(b, F.col("id_a") < F.col("id_b"))
-    else:
-        cand = minhash_lsh_candidates(
-            keyed, "__k", id_col, shingle_size=shingle_size, kind="char",
-            **lsh_kwargs,
-        )
-        kk = _restricted_to_candidates(keyed, cand, id_col)
-        paired = cand.join(
-            kk.select(F.col(id_col).alias("id_a"), F.col("__k").alias("k_a")),
-            "id_a",
-        ).join(
-            kk.select(F.col(id_col).alias("id_b"), F.col("__k").alias("k_b")),
-            "id_b",
-        )
-    # banded Levenshtein: the threshold arg short-circuits the DP once
-    # the running distance exceeds max_distance — O(threshold * len)
-    # per pair instead of O(len^2), returning -1 for pairs past the
-    # band. Output-identical to the unbounded form for every kept pair
-    # (distances <= threshold are exact), and the dominant cost of the
-    # exact method's all-pairs verify at scale (r7 sf10: a 1.25e9-pair
-    # comparison spent most of its runtime in full 50x50 DP tables
-    # whose distances were then filtered away).
-    dist = F.levenshtein("k_a", "k_b", int(max_distance))
-    out = (
-        paired.withColumn("distance", dist)
-        .filter((F.col("distance") >= 0) & (F.col("distance") <= max_distance))
-        .select("id_a", "id_b", "distance")
-    )
-    if cand is not None:
+    with owned_caches() as own:
+        cand = None
+        if method == "exact":
+            a = keyed.select(F.col(id_col).alias("id_a"), F.col("__k").alias("k_a"))
+            b = keyed.select(F.col(id_col).alias("id_b"), F.col("__k").alias("k_b"))
+            paired = a.join(b, F.col("id_a") < F.col("id_b"))
+        else:
+            cand = minhash_lsh_candidates(
+                keyed, "__k", id_col, shingle_size=shingle_size, kind="char",
+                **lsh_kwargs,
+            )
+            kk = _restricted_to_candidates(keyed, cand, id_col)
+            paired = cand.join(
+                kk.select(F.col(id_col).alias("id_a"), F.col("__k").alias("k_a")),
+                "id_a",
+            ).join(
+                kk.select(F.col(id_col).alias("id_b"), F.col("__k").alias("k_b")),
+                "id_b",
+            )
+        # banded Levenshtein: the threshold arg short-circuits the DP once
+        # the running distance exceeds max_distance — O(threshold * len)
+        # per pair instead of O(len^2), returning -1 for pairs past the
+        # band. Output-identical to the unbounded form for every kept pair
+        # (distances <= threshold are exact), and the dominant cost of the
+        # exact method's all-pairs verify at scale (r7 sf10: a 1.25e9-pair
+        # comparison spent most of its runtime in full 50x50 DP tables
+        # whose distances were then filtered away).
+        dist = F.levenshtein("k_a", "k_b", int(max_distance))
         out = (
-            _release_caches(out, cand)
-            if eager
-            else _attach_caches(out, cand)
+            paired.withColumn("distance", dist)
+            .filter((F.col("distance") >= 0) & (F.col("distance") <= max_distance))
+            .select("id_a", "id_b", "distance")
         )
-    return out
+        return out if cand is None else own.result(out, eager)
 
 
 def minhash_dedup(
@@ -1224,7 +1182,7 @@ def embedding_neardup_pairs(
 
     out = paired.mapInPandas(verify, schema="id_a long, id_b long, cosine double")
     if collapsed_cache is not None:
-        out = _attach_caches(out, collapsed_cache)
+        out = attach_caches(out, collapsed_cache)
     return out
 
 
@@ -1513,86 +1471,82 @@ def crosscorpus_neardup_pairs(
             .filter(F.size("__store_ids") <= max_bucket)
         )
         joined = bn.join(bs, ["band", "bucket"])
-    cand = (
-        joined.select(
-            F.explode("__new_ids").alias("id_new"), F.col("__store_ids")
-        )
-        .select("id_new", F.explode("__store_ids").alias("id_store"))
-        .distinct()
-        .persist()
-    )
-    shn = _shingle_sets(
-        new.join(
-            cand.select(F.col("id_new").alias(id_col)).distinct(),
-            id_col,
-            "left_semi",
-        ),
-        text_col,
-        id_col,
-        shingle_size,
-    )
-    shs = _shingle_sets(
-        store.join(
-            cand.select(F.col("id_store").alias(id_col)).distinct(),
-            id_col,
-            "left_semi",
-        ),
-        text_col,
-        id_col,
-        shingle_size,
-    )
-    # eager-materialize both array-payload sides so the planner sees
-    # TRUE sizes (see minhash_lsh_pairs' verify join): broadcasts only
-    # when a side genuinely fits, shuffle-joins at scale
-    from pyspark import StorageLevel
-
-    shn = shn.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-    shn.count()
-    shs = shs.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-    shs.count()
-    verified = (
-        cand.join(
-            shn.withColumnsRenamed({id_col: "id_new", "__sh": "sh_n"}),
-            "id_new",
-        )
-        .join(
-            shs.withColumnsRenamed({id_col: "id_store", "__sh": "sh_s"}),
-            "id_store",
-        )
-        .withColumn(
-            "__i", F.size(F.array_intersect("sh_n", "sh_s")).cast("long")
-        )
-        .withColumn("__u", F.size(F.array_union("sh_n", "sh_s")).cast("long"))
-        # integer-exact threshold + micro similarity (round-at-tie
-        # class; see minhash_lsh_pairs)
-        .filter(
-            F.when(
-                F.col("__u") == 0,
-                F.lit(0) >= F.lit(int(round(threshold * 1_000_000))),
-            ).otherwise(
-                F.col("__i") * F.lit(1_000_000)
-                >= F.lit(int(round(threshold * 1_000_000))) * F.col("__u")
+    with owned_caches() as own:
+        cand = own(
+            joined.select(
+                F.explode("__new_ids").alias("id_new"), F.col("__store_ids")
             )
+            .select("id_new", F.explode("__store_ids").alias("id_store"))
+            .distinct()
         )
-        .withColumn(
-            "jaccard",
-            F.when(F.col("__u") == 0, F.lit(0.0)).otherwise(
-                F.round(F.col("__i") / F.col("__u"), 6)
+        shn = _shingle_sets(
+            new.join(
+                cand.select(F.col("id_new").alias(id_col)).distinct(),
+                id_col,
+                "left_semi",
             ),
+            text_col,
+            id_col,
+            shingle_size,
         )
-        .withColumn(
-            "jaccard_micro",
-            F.when(F.col("__u") == 0, F.lit(0).cast("long")).otherwise(
-                F.expr("(__i * 1000000L) div __u")
+        shs = _shingle_sets(
+            store.join(
+                cand.select(F.col("id_store").alias(id_col)).distinct(),
+                id_col,
+                "left_semi",
             ),
+            text_col,
+            id_col,
+            shingle_size,
         )
-        .select("id_new", "id_store", "jaccard", "jaccard_micro")
-    )
-    return (
-        _release_caches(verified, cand, shn, shs)
-        if eager
-        else _attach_caches(verified, cand, shn, shs)
-    )
+        # eager-materialize both array-payload sides so the planner sees
+        # TRUE sizes (see minhash_lsh_pairs' verify join): broadcasts only
+        # when a side genuinely fits, shuffle-joins at scale
+        from pyspark import StorageLevel
+
+        shn = own(shn, StorageLevel.MEMORY_AND_DISK_DESER)
+        shn.count()
+        shs = own(shs, StorageLevel.MEMORY_AND_DISK_DESER)
+        shs.count()
+        verified = (
+            cand.join(
+                shn.withColumnsRenamed({id_col: "id_new", "__sh": "sh_n"}),
+                "id_new",
+            )
+            .join(
+                shs.withColumnsRenamed({id_col: "id_store", "__sh": "sh_s"}),
+                "id_store",
+            )
+            .withColumn(
+                "__i", F.size(F.array_intersect("sh_n", "sh_s")).cast("long")
+            )
+            .withColumn("__u", F.size(F.array_union("sh_n", "sh_s")).cast("long"))
+            # integer-exact threshold + micro similarity (round-at-tie
+            # class; see minhash_lsh_pairs)
+            .filter(
+                F.when(
+                    F.col("__u") == 0,
+                    F.lit(0) >= F.lit(int(round(threshold * 1_000_000))),
+                ).otherwise(
+                    F.col("__i") * F.lit(1_000_000)
+                    >= F.lit(int(round(threshold * 1_000_000))) * F.col("__u")
+                )
+            )
+            .withColumn(
+                "jaccard",
+                F.when(F.col("__u") == 0, F.lit(0.0)).otherwise(
+                    F.round(F.col("__i") / F.col("__u"), 6)
+                ),
+            )
+            .withColumn(
+                "jaccard_micro",
+                F.when(F.col("__u") == 0, F.lit(0).cast("long")).otherwise(
+                    F.expr("(__i * 1000000L) div __u")
+                ),
+            )
+            .select("id_new", "id_store", "jaccard", "jaccard_micro")
+        )
+        return own.result(verified, eager)
 
 
 def build_band_store(
@@ -1704,144 +1658,141 @@ def containment_pairs(
     intersection."""
     from pyspark import StorageLevel
 
-    # the shingle arrays feed SIX consumers (DF agg, rank join,
-    # postings, both verify sides) — persist spill-safe or the text
-    # scan + shingle explode re-runs per consumer (exchange-reuse rule)
-    # _spread first: a single-file corpus otherwise tokenizes and
-    # shingles on ONE scan partition (measured 3.7s single-threaded vs
-    # 0.6s spread at sf0.1 — the whole build was serialized)
-    grams = (
-        _spread(df.select(F.col(id_col), F.col(text_col)))
-        .select(F.col(id_col), tokens(F.coalesce(F.col(text_col), F.lit(""))).alias("__tk"))
-        .select(
-            F.col(id_col),
-            F.array_distinct(word_shingles_of_tokens("__tk", shingle_size)).alias(
-                "grams"
-            ),
-        )
-        .filter(F.size("grams") > 0)
-        .persist(StorageLevel.MEMORY_AND_DISK_DESER)
-    )
-    # EAGER materialization happens one step later (rows_df.count()):
-    # computing rows_df scans THROUGH this cache and populates it in
-    # the same job, so the separate grams.count() stats job the r5
-    # probe introduced is fused away (VERDICT r6 item 5 — one
-    # materialization pass, not two). The stats property it bought is
-    # preserved: by the time the verify joins compile (the eager
-    # localCheckpoint at return), the InMemoryRelation already reports
-    # its TRUE array-payload size, so Catalyst broadcasts a verify
-    # side only when the corpus genuinely fits and shuffle-joins at
-    # 100x scale (the sf10 "not enough memory to build and broadcast"
-    # OOM class stays closed).
-    # hash INSIDE the array, explode LONGS: the shingle-string explode
-    # was the scan stage's dominant cost (the minhash path measured
-    # 10x at sf0.1), and nothing downstream needs the string — the
-    # rank window tie-breaks on the hash (the prefix-exactness
-    # argument holds for ANY R-subset of a document's shingles, so the
-    # tiebreak is free to choose) and the verify join computes exact
-    # intersections on the original gram ARRAYS.
-    # the per-doc shingle count rides THROUGH the explode (one extra
-    # int per row in the df-join shuffle) instead of re-joining the
-    # gram table by id afterwards — that join exchanged the whole
-    # corpus row stream a second time just to attach a number the
-    # explode already knew (r7; column pruning drops sz from the
-    # dfreq branch, so the aggregate shuffle stays (h)-only)
-    rows = grams.select(
-        F.col(id_col),
-        F.size("grams").alias("sz"),
-        F.explode(
-            F.transform(
-                "grams", lambda g: F.xxhash64(F.lit("cont-v1"), g)
+    with owned_caches() as own:
+        # the shingle arrays feed SIX consumers (DF agg, rank join,
+        # postings, both verify sides) — persist spill-safe or the text
+        # scan + shingle explode re-runs per consumer (exchange-reuse rule)
+        # _spread first: a single-file corpus otherwise tokenizes and
+        # shingles on ONE scan partition (measured 3.7s single-threaded vs
+        # 0.6s spread at sf0.1 — the whole build was serialized)
+        grams = own(
+            _spread(df.select(F.col(id_col), F.col(text_col)))
+            .select(F.col(id_col), tokens(F.coalesce(F.col(text_col), F.lit(""))).alias("__tk"))
+            .select(
+                F.col(id_col),
+                F.array_distinct(word_shingles_of_tokens("__tk", shingle_size)).alias(
+                    "grams"
+                ),
             )
-        ).alias("h"),
-    )
-    dfreq = rows.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-    from pyspark.sql import Window
+            .filter(F.size("grams") > 0),
+            StorageLevel.MEMORY_AND_DISK_DESER,
+        )
+        # EAGER materialization happens one step later (rows_df.count()):
+        # computing rows_df scans THROUGH this cache and populates it in
+        # the same job, so the separate grams.count() stats job the r5
+        # probe introduced is fused away (VERDICT r6 item 5 — one
+        # materialization pass, not two). The stats property it bought is
+        # preserved: by the time the verify joins compile (the eager
+        # localCheckpoint at return), the InMemoryRelation already reports
+        # its TRUE array-payload size, so Catalyst broadcasts a verify
+        # side only when the corpus genuinely fits and shuffle-joins at
+        # 100x scale (the sf10 "not enough memory to build and broadcast"
+        # OOM class stays closed).
+        # hash INSIDE the array, explode LONGS: the shingle-string explode
+        # was the scan stage's dominant cost (the minhash path measured
+        # 10x at sf0.1), and nothing downstream needs the string — the
+        # rank window tie-breaks on the hash (the prefix-exactness
+        # argument holds for ANY R-subset of a document's shingles, so the
+        # tiebreak is free to choose) and the verify join computes exact
+        # intersections on the original gram ARRAYS.
+        # the per-doc shingle count rides THROUGH the explode (one extra
+        # int per row in the df-join shuffle) instead of re-joining the
+        # gram table by id afterwards — that join exchanged the whole
+        # corpus row stream a second time just to attach a number the
+        # explode already knew (r7; column pruning drops sz from the
+        # dfreq branch, so the aggregate shuffle stays (h)-only)
+        rows = grams.select(
+            F.col(id_col),
+            F.size("grams").alias("sz"),
+            F.explode(
+                F.transform(
+                    "grams", lambda g: F.xxhash64(F.lit("cont-v1"), g)
+                )
+            ).alias("h"),
+        )
+        dfreq = rows.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
+        from pyspark.sql import Window
 
-    # (row ⋈ df) feeds both the rank input and the postings — share it
-    # instead of joining the corpus-sized row stream against the gram
-    # table twice; eager for the same stats-accuracy reason as `grams`
-    rows_df = rows.join(dfreq, "h").persist(StorageLevel.MEMORY_AND_DISK_DESER)
-    rows_df.count()
-    sized = rows_df
-    w = Window.partitionBy(id_col).orderBy(F.asc("df"), F.asc("h"))
-    # prefix size derives from the SAME t*size expression the verify
-    # filter uses (R = sz - ceil(t*sz) + 1): a pair passing verify has
-    # n_inter >= ceil(t*sz), so B misses at most sz - ceil(t*sz) of
-    # A's shingles and the R rarest must contain a witness — computing
-    # R from an independent (1-t)*sz rounding could lose 1 at float
-    # boundaries and break the exactness argument
-    prefix = (
-        sized.withColumn("__rn", F.row_number().over(w))
-        .filter(
-            F.col("__rn")
-            <= F.col("sz")
-            - F.ceil(F.lit(threshold) * F.col("sz")).cast("int")
-            + 1
+        # (row ⋈ df) feeds both the rank input and the postings — share it
+        # instead of joining the corpus-sized row stream against the gram
+        # table twice; eager for the same stats-accuracy reason as `grams`
+        rows_df = own(rows.join(dfreq, "h"), StorageLevel.MEMORY_AND_DISK_DESER)
+        rows_df.count()
+        sized = rows_df
+        w = Window.partitionBy(id_col).orderBy(F.asc("df"), F.asc("h"))
+        # prefix size derives from the SAME t*size expression the verify
+        # filter uses (R = sz - ceil(t*sz) + 1): a pair passing verify has
+        # n_inter >= ceil(t*sz), so B misses at most sz - ceil(t*sz) of
+        # A's shingles and the R rarest must contain a witness — computing
+        # R from an independent (1-t)*sz rounding could lose 1 at float
+        # boundaries and break the exactness argument
+        prefix = (
+            sized.withColumn("__rn", F.row_number().over(w))
+            .filter(
+                F.col("__rn")
+                <= F.col("sz")
+                - F.ceil(F.lit(threshold) * F.col("sz")).cast("int")
+                + 1
+            )
+            .filter(F.col("df") <= F.lit(max_df))
+            .select(F.col(id_col).alias("id_a"), "h")
         )
-        .filter(F.col("df") <= F.lit(max_df))
-        .select(F.col(id_col).alias("id_a"), "h")
-    )
-    postings = rows_df.filter(F.col("df") <= F.lit(max_df)).select(
-        F.col(id_col).alias("id_b"), "h"
-    )
-    cands = (
-        prefix.join(postings, "h")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
+        postings = rows_df.filter(F.col("df") <= F.lit(max_df)).select(
+            F.col(id_col).alias("id_b"), "h"
         )
-        .distinct()
-    )
-    # grams is persisted AND eagerly materialized above, so the planner
-    # sees the true (array-payload) size of both verify sides —
-    # broadcast only when the corpus genuinely fits, shuffle at scale
-    # (the sf10 probe's driver-OOM class; see minhash_lsh_pairs)
-    ga = grams.select(
-        F.col(id_col).alias("id_a"), F.col("grams").alias("__ga")
-    )
-    gb = grams.select(
-        F.col(id_col).alias("id_b"), F.col("grams").alias("__gb")
-    )
-    inter = F.size(F.array_intersect("__ga", "__gb"))
-    verified = (
-        cands.join(ga, "id_a")
-        .join(gb, "id_b")
-        .withColumn("n_inter", inter.cast("long"))
-        .withColumn("size_a", F.size("__ga").cast("long"))
-        .withColumn("size_b", F.size("__gb").cast("long"))
-        .withColumn(
-            "containment",
-            F.round(
-                F.col("n_inter")
-                / F.least("size_a", "size_b").cast("double"),
-                6,
-            ),
+        cands = (
+            prefix.join(postings, "h")
+            .filter(F.col("id_a") != F.col("id_b"))
+            .select(
+                F.least("id_a", "id_b").alias("id_a"),
+                F.greatest("id_a", "id_b").alias("id_b"),
+            )
+            .distinct()
         )
-        # integer-exact threshold and micro similarity: the float
-        # product `threshold * least` is off the true rational by an
-        # ulp (0.6 * 5 = 3.0000000000000004 excludes an exact-boundary
-        # pair), and round(ratio, 6) is tie-ambiguous cross-engine
-        .withColumn(
-            "containment_micro",
-            F.expr("(n_inter * 1000000L) div least(size_a, size_b)"),
+        # grams is persisted AND eagerly materialized above, so the planner
+        # sees the true (array-payload) size of both verify sides —
+        # broadcast only when the corpus genuinely fits, shuffle at scale
+        # (the sf10 probe's driver-OOM class; see minhash_lsh_pairs)
+        ga = grams.select(
+            F.col(id_col).alias("id_a"), F.col("grams").alias("__ga")
         )
-        .filter(
-            F.col("n_inter") * F.lit(1_000_000)
-            >= F.lit(int(round(threshold * 1_000_000)))
-            * F.least("size_a", "size_b")
+        gb = grams.select(
+            F.col(id_col).alias("id_b"), F.col("grams").alias("__gb")
         )
-        .select(
-            "id_a", "id_b", "size_a", "size_b", "n_inter",
-            "containment", "containment_micro",
+        inter = F.size(F.array_intersect("__ga", "__gb"))
+        verified = (
+            cands.join(ga, "id_a")
+            .join(gb, "id_b")
+            .withColumn("n_inter", inter.cast("long"))
+            .withColumn("size_a", F.size("__ga").cast("long"))
+            .withColumn("size_b", F.size("__gb").cast("long"))
+            .withColumn(
+                "containment",
+                F.round(
+                    F.col("n_inter")
+                    / F.least("size_a", "size_b").cast("double"),
+                    6,
+                ),
+            )
+            # integer-exact threshold and micro similarity: the float
+            # product `threshold * least` is off the true rational by an
+            # ulp (0.6 * 5 = 3.0000000000000004 excludes an exact-boundary
+            # pair), and round(ratio, 6) is tie-ambiguous cross-engine
+            .withColumn(
+                "containment_micro",
+                F.expr("(n_inter * 1000000L) div least(size_a, size_b)"),
+            )
+            .filter(
+                F.col("n_inter") * F.lit(1_000_000)
+                >= F.lit(int(round(threshold * 1_000_000)))
+                * F.least("size_a", "size_b")
+            )
+            .select(
+                "id_a", "id_b", "size_a", "size_b", "n_inter",
+                "containment", "containment_micro",
+            )
         )
-    )
-    return (
-        _release_caches(verified, grams, rows_df)
-        if eager
-        else _attach_caches(verified, grams, rows_df)
-    )
+        return own.result(verified, eager)
 
 
 def containment_dedup(
@@ -2066,105 +2017,105 @@ def neardup_eval(
         )
     cut = (sample_permille * denominator) // 1000
     sample = df.filter(hash_bucket(id_col, denominator) < cut)
-    # EXACT truth via the inverted index, not a cartesian: a pair's
-    # intersection size is its co-occurrence count over the exploded
-    # distinct-shingle postings, and with tn > 0 a pair sharing ZERO
-    # shingles can never reach the threshold — so pairs that never
-    # co-occur rightly never materialize. Replaces the all-pairs
-    # array_intersect (measured 6x on the sf0.1 fixture); still
-    # quadratic per hot shingle (freq² pairs — the exactness cost, no
-    # bucket cap allowed here), so the sample bound stays the contract.
-    sh = (
-        # _spread: the hash-sampled slice of a single-file corpus
-        # otherwise shingles on one scan partition (see containment).
-        # Per-doc ARRAY persist + sizes riding the explode (the
-        # measured best of three shapes, interleaved best-of-4 ×2 at
-        # sf0.1 on the declared query: array+sizes-joins 6.37/6.92s,
-        # FLAT (id, n, shingle) persist 11.21/11.66s, this hybrid
-        # 5.81/6.12s — the flat string-per-row cache the r7 mid-build
-        # commit introduced stored every shingle as its own cached row
-        # and was a 2x regression once a calm window existed; reverted
-        # here while KEEPING its good half). Carrying the distinct-set
-        # size through the explode (two ints per row) lets the pair
-        # aggregate read both union sizes off its own matched rows via
-        # first(), so the two per-side sizes joins stay gone (guide
-        # §2.3/§2.4). The persist hands Catalyst the TRUE size of the
-        # self-join's sides — a postings side broadcasts only when it
-        # genuinely fits (the sf10 broadcast-OOM class).
-        _shingle_sets(_spread(sample), text_col, id_col, shingle_size)
-        .withColumn("__n", F.size("__sh").cast("long"))
-        .persist()  # two consumers: both postings sides of the co-join
-    )
-    ex = sh.select(
-        F.col(id_col).alias("__id"),
-        F.col("__n"),
-        F.explode("__sh").alias("__s"),
-    )
-    co = (
-        ex.select(
-            F.col("__id").alias("id_a"), F.col("__n").alias("__na"), "__s"
+    with owned_caches() as own:
+        # EXACT truth via the inverted index, not a cartesian: a pair's
+        # intersection size is its co-occurrence count over the exploded
+        # distinct-shingle postings, and with tn > 0 a pair sharing ZERO
+        # shingles can never reach the threshold — so pairs that never
+        # co-occur rightly never materialize. Replaces the all-pairs
+        # array_intersect (measured 6x on the sf0.1 fixture); still
+        # quadratic per hot shingle (freq² pairs — the exactness cost, no
+        # bucket cap allowed here), so the sample bound stays the contract.
+        sh = own(
+            # _spread: the hash-sampled slice of a single-file corpus
+            # otherwise shingles on one scan partition (see containment).
+            # Per-doc ARRAY persist + sizes riding the explode (the
+            # measured best of three shapes, interleaved best-of-4 ×2 at
+            # sf0.1 on the declared query: array+sizes-joins 6.37/6.92s,
+            # FLAT (id, n, shingle) persist 11.21/11.66s, this hybrid
+            # 5.81/6.12s — the flat string-per-row cache the r7 mid-build
+            # commit introduced stored every shingle as its own cached row
+            # and was a 2x regression once a calm window existed; reverted
+            # here while KEEPING its good half). Carrying the distinct-set
+            # size through the explode (two ints per row) lets the pair
+            # aggregate read both union sizes off its own matched rows via
+            # first(), so the two per-side sizes joins stay gone (guide
+            # §2.3/§2.4). The persist hands Catalyst the TRUE size of the
+            # self-join's sides — a postings side broadcasts only when it
+            # genuinely fits (the sf10 broadcast-OOM class).
+            _shingle_sets(_spread(sample), text_col, id_col, shingle_size)
+            .withColumn("__n", F.size("__sh").cast("long"))
+        )  # two consumers: both postings sides of the co-join
+        ex = sh.select(
+            F.col(id_col).alias("__id"),
+            F.col("__n"),
+            F.explode("__sh").alias("__s"),
         )
-        .join(
+        co = (
             ex.select(
-                F.col("__id").alias("id_b"), F.col("__n").alias("__nb"), "__s"
-            ),
-            "__s",
+                F.col("__id").alias("id_a"), F.col("__n").alias("__na"), "__s"
+            )
+            .join(
+                ex.select(
+                    F.col("__id").alias("id_b"), F.col("__n").alias("__nb"), "__s"
+                ),
+                "__s",
+            )
+            .filter(F.col("id_a") < F.col("id_b"))
+            .groupBy("id_a", "id_b")
+            .agg(
+                F.count(F.lit(1)).alias("__i"),
+                F.first("__na").alias("__na"),
+                F.first("__nb").alias("__nb"),
+            )
         )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.count(F.lit(1)).alias("__i"),
-            F.first("__na").alias("__na"),
-            F.first("__nb").alias("__nb"),
+        uni = F.col("__na") + F.col("__nb") - F.col("__i")
+        true_pairs = co.filter(
+            F.lit(td) * F.col("__i") >= F.lit(tn) * uni
+        ).select("id_a", "id_b")
+        ids = sample.select(F.col(id_col))
+        pred = (
+            pairs.select("id_a", "id_b")
+            .join(ids.withColumnRenamed(id_col, "id_a"), "id_a", "left_semi")
+            .join(ids.withColumnRenamed(id_col, "id_b"), "id_b", "left_semi")
         )
-    )
-    uni = F.col("__na") + F.col("__nb") - F.col("__i")
-    true_pairs = co.filter(
-        F.lit(td) * F.col("__i") >= F.lit(tn) * uni
-    ).select("id_a", "id_b")
-    ids = sample.select(F.col(id_col))
-    pred = (
-        pairs.select("id_a", "id_b")
-        .join(ids.withColumnRenamed(id_col, "id_a"), "id_a", "left_semi")
-        .join(ids.withColumnRenamed(id_col, "id_b"), "id_b", "left_semi")
-    )
-    m = pred.withColumn("__p", F.lit(1)).join(
-        true_pairs.withColumn("__t", F.lit(1)), ["id_a", "id_b"], "full_outer"
-    )
-    counts = m.agg(
-        F.coalesce(F.sum("__p"), F.lit(0)).cast("long").alias("n_pred_pairs"),
-        F.coalesce(F.sum("__t"), F.lit(0)).cast("long").alias("n_true_pairs"),
-        F.coalesce(
-            F.sum((F.col("__p").isNotNull() & F.col("__t").isNotNull()).cast("int")),
-            F.lit(0),
+        m = pred.withColumn("__p", F.lit(1)).join(
+            true_pairs.withColumn("__t", F.lit(1)), ["id_a", "id_b"], "full_outer"
         )
-        .cast("long")
-        .alias("tp"),
-    )
-    n_sample = sample.agg(F.count(F.lit(1)).alias("n_sample"))
-    card = (
-        counts.join(F.broadcast(n_sample))
-        .withColumns(
-            {
-                "fp": (F.col("n_pred_pairs") - F.col("tp")).cast("long"),
-                "fn": (F.col("n_true_pairs") - F.col("tp")).cast("long"),
-                "precision_permille": F.when(
-                    F.col("n_pred_pairs") == 0, F.lit(1000).cast("long")
-                ).otherwise(F.expr("(1000 * tp) div n_pred_pairs")),
-                "recall_permille": F.when(
-                    F.col("n_true_pairs") == 0, F.lit(1000).cast("long")
-                ).otherwise(F.expr("(1000 * tp) div n_true_pairs")),
-            }
+        counts = m.agg(
+            F.coalesce(F.sum("__p"), F.lit(0)).cast("long").alias("n_pred_pairs"),
+            F.coalesce(F.sum("__t"), F.lit(0)).cast("long").alias("n_true_pairs"),
+            F.coalesce(
+                F.sum((F.col("__p").isNotNull() & F.col("__t").isNotNull()).cast("int")),
+                F.lit(0),
+            )
+            .cast("long")
+            .alias("tp"),
         )
-        .select(
-            "n_sample",
-            "n_true_pairs",
-            "n_pred_pairs",
-            "tp",
-            "fp",
-            "fn",
-            "precision_permille",
-            "recall_permille",
+        n_sample = sample.agg(F.count(F.lit(1)).alias("n_sample"))
+        card = (
+            counts.join(F.broadcast(n_sample))
+            .withColumns(
+                {
+                    "fp": (F.col("n_pred_pairs") - F.col("tp")).cast("long"),
+                    "fn": (F.col("n_true_pairs") - F.col("tp")).cast("long"),
+                    "precision_permille": F.when(
+                        F.col("n_pred_pairs") == 0, F.lit(1000).cast("long")
+                    ).otherwise(F.expr("(1000 * tp) div n_pred_pairs")),
+                    "recall_permille": F.when(
+                        F.col("n_true_pairs") == 0, F.lit(1000).cast("long")
+                    ).otherwise(F.expr("(1000 * tp) div n_true_pairs")),
+                }
+            )
+            .select(
+                "n_sample",
+                "n_true_pairs",
+                "n_pred_pairs",
+                "tp",
+                "fp",
+                "fn",
+                "precision_permille",
+                "recall_permille",
+            )
         )
-    )
-    return _release_caches(card, sh) if eager else _attach_caches(card, sh)
+        return own.result(card, eager)

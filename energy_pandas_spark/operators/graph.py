@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from energy_pandas_spark.util import owned_caches
+
 __all__ = [
     "connected_components",
     "connected_components_star",
@@ -312,51 +314,48 @@ def pagerank(
     w_expr = (
         F.col(weight).cast("long") if weight is not None else F.lit(1).cast("long")
     )
-    # edge projection cached FLAT: outw, ew and the node set all read
-    # it, so the (possibly expensive) upstream edge build runs once,
-    # not once per consumer; released below once both eager
-    # checkpoints and the node count have consumed it
-    e = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v"), w_expr.alias("__w")
-    ).persist()
-    outw = e.groupBy("u").agg(F.sum("__w").alias("__ow"))
-    # degree-annotated edges, repartitioned on u and eagerly
-    # checkpointed. An r7 experiment replaced these checkpoints with
-    # persist() to keep hashpartitioning across rounds (a checkpoint
-    # reports UnknownPartitioning under AQE): the round joins STILL
-    # re-exchanged — EnsureRequirements only reuses a cached layout
-    # when its partition count matches the other side's exchange — and
-    # cached plans are exempt from AQE coalescing, so every round ran
-    # at full shuffle.partitions width (measured 4.5s -> 6.2s at
-    # sf0.1). The checkpoint + AQE-coalesced per-round exchanges of
-    # the node-sized tables are the better trade at every scale tried.
-    ew = (
-        e.join(outw, "u")
-        .repartition("u")
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select("u")
-        .union(e.select(F.col("v").alias("u")))
-        .distinct()
-        .repartition("u")
-    )
-    if seeds is not None:
-        scol = seeds.columns[0]
-        sd = seeds.select(F.col(scol).alias("u")).distinct()
-        # seed sets are query-sized; broadcast the membership flag so
-        # the node table never re-shuffles for it
-        nodes = nodes.join(
-            F.broadcast(sd.withColumn("__in", F.lit(True))), "u", "left"
-        ).select("u", F.coalesce("__in", F.lit(False)).alias("__seed"))
-    else:
-        nodes = nodes.select("u", F.lit(True).alias("__seed"))
-    nodes = nodes.localCheckpoint(eager=True)
-    n = nodes.filter("__seed").count()
-    # ew and nodes are materialized checkpoints and the count is done:
-    # nothing reads the edge cache anymore — release it here rather
-    # than leaking it to the harness drain
-    e.unpersist()
+    with owned_caches() as own:
+        # edge projection cached FLAT: outw, ew and the node set all read
+        # it, so the (possibly expensive) upstream edge build runs once,
+        # not once per consumer; released when the block exits, once both
+        # eager checkpoints and the node count have consumed it
+        e = own(edges.select(
+            F.col(src).alias("u"), F.col(dst).alias("v"), w_expr.alias("__w")
+        ))
+        outw = e.groupBy("u").agg(F.sum("__w").alias("__ow"))
+        # degree-annotated edges, repartitioned on u and eagerly
+        # checkpointed. An r7 experiment replaced these checkpoints with
+        # persist() to keep hashpartitioning across rounds (a checkpoint
+        # reports UnknownPartitioning under AQE): the round joins STILL
+        # re-exchanged — EnsureRequirements only reuses a cached layout
+        # when its partition count matches the other side's exchange — and
+        # cached plans are exempt from AQE coalescing, so every round ran
+        # at full shuffle.partitions width (measured 4.5s -> 6.2s at
+        # sf0.1). The checkpoint + AQE-coalesced per-round exchanges of
+        # the node-sized tables are the better trade at every scale tried.
+        ew = (
+            e.join(outw, "u")
+            .repartition("u")
+            .localCheckpoint(eager=True)
+        )
+        nodes = (
+            e.select("u")
+            .union(e.select(F.col("v").alias("u")))
+            .distinct()
+            .repartition("u")
+        )
+        if seeds is not None:
+            scol = seeds.columns[0]
+            sd = seeds.select(F.col(scol).alias("u")).distinct()
+            # seed sets are query-sized; broadcast the membership flag so
+            # the node table never re-shuffles for it
+            nodes = nodes.join(
+                F.broadcast(sd.withColumn("__in", F.lit(True))), "u", "left"
+            ).select("u", F.coalesce("__in", F.lit(False)).alias("__seed"))
+        else:
+            nodes = nodes.select("u", F.lit(True).alias("__seed"))
+        nodes = nodes.localCheckpoint(eager=True)
+        n = nodes.filter("__seed").count()
     if n == 0:
         if seeds is not None:
             raise ValueError("no seed id appears in the edge set")

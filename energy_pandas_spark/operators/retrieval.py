@@ -43,13 +43,12 @@ same documented caveat as the DSIR oracle).
 """
 
 from __future__ import annotations
-from energy_pandas_spark.util import track_cache
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from energy_pandas_spark.functions.textfns import tokens
-from energy_pandas_spark.util import attach_caches, spread_partitions
+from energy_pandas_spark.util import owned_caches, spread_partitions, track_cache
 
 __all__ = [
     "build_postings",
@@ -131,23 +130,6 @@ def _matched(
     return stats, matched, dfreq
 
 
-def _finish(out: DataFrame, matched: DataFrame) -> DataFrame:
-    """Materialize the (queries x k)-sized result eagerly
-    (localCheckpoint truncates the lineage off the persisted matched
-    postings) and RELEASE the cache — without this every search call
-    would pin one persisted frame for the rest of the session (the
-    curation loop workload makes thousands of calls).
-
-    Fault-tolerance caveat (ADVICE r6): localCheckpoint truncates
-    lineage, so the blocks are unrecoverable under executor loss — an
-    acceptable trade for a (queries x k)-sized result consumed
-    immediately. Callers needing lineage keep ``eager=False`` and
-    release the attached cache via ``util.release_caches``."""
-    out = out.localCheckpoint(eager=True)
-    matched.unpersist()
-    return out
-
-
 def search_topk(
     docs: DataFrame,
     qterms: DataFrame,
@@ -170,33 +152,36 @@ def search_topk(
     (score desc, doc_id asc).
 
     ``eager=True`` (default) materializes the small result and
-    releases the matched-postings cache before returning; pass
-    ``eager=False`` to get the lazy plan instead — the caller then
-    owns unpersisting (plan-inspection/tests use this)."""
-    stats, matched, dfreq = _matched(docs, qterms, text_col, id_col, postings)
-    idf = dfreq.crossJoin(F.broadcast(stats)).select(
-        "term",
-        F.expr(f"(n_docs * {IDF_SCALE}) div df").alias("idf_q"),
-    )
-    scored = (
-        matched.join(F.broadcast(qterms), "term")
-        .join(F.broadcast(idf), "term")
-        .groupBy("query_id", id_col)
-        .agg(
-            F.sum(F.col("tf") * F.col("qtf") * F.col("idf_q")).alias("__score"),
-            F.count(F.lit(1)).alias("__nt"),
+    releases the matched-postings cache before returning, so the
+    curation loop's thousands of calls pin nothing. Pass
+    ``eager=False`` to get the lazy plan instead, with the cache
+    attached (``util.release_caches``) and handed to the enclosing
+    ``util.owned_caches`` block; ``bm25_topk`` follows the same rule."""
+    with owned_caches() as own:
+        stats, matched, dfreq = _matched(docs, qterms, text_col, id_col, postings)
+        idf = dfreq.crossJoin(F.broadcast(stats)).select(
+            "term",
+            F.expr(f"(n_docs * {IDF_SCALE}) div df").alias("idf_q"),
         )
-    )
-    if require_all:
-        need = qterms.groupBy("query_id").agg(F.count(F.lit(1)).alias("__need"))
         scored = (
-            scored.join(F.broadcast(need), "query_id")
-            .filter(F.col("__nt") == F.col("__need"))
-            .drop("__need")
+            matched.join(F.broadcast(qterms), "term")
+            .join(F.broadcast(idf), "term")
+            .groupBy("query_id", id_col)
+            .agg(
+                F.sum(F.col("tf") * F.col("qtf") * F.col("idf_q")).alias("__score"),
+                F.count(F.lit(1)).alias("__nt"),
+            )
         )
-    scored = scored.drop("__nt")
-    out = _topk(scored, k, id_col).withColumnRenamed("__score", "score_q")
-    return _finish(out, matched) if eager else attach_caches(out, matched)
+        if require_all:
+            need = qterms.groupBy("query_id").agg(F.count(F.lit(1)).alias("__need"))
+            scored = (
+                scored.join(F.broadcast(need), "query_id")
+                .filter(F.col("__nt") == F.col("__need"))
+                .drop("__need")
+            )
+        scored = scored.drop("__nt")
+        out = _topk(scored, k, id_col).withColumnRenamed("__score", "score_q")
+        return own.result(out, eager)
 
 
 def bm25_topk(
@@ -226,61 +211,62 @@ def bm25_topk(
     ``docs`` with one map-only tokenize scan instead of silently
     deflating avgdl (and every score) from the subset. Returns
     (query_id, doc_id, score_q, rank)."""
-    _, matched, dfreq = _matched(docs, qterms, text_col, id_col, postings)
-    # N and avgdl must cover ALL docs, not just matched postings.
-    if postings is not None and full_postings:
-        # a caller-supplied postings frame (typically persisted and
-        # shared across scorers, the rrf_fuse composition) already
-        # holds the corpus token mass: sum(tf) over all postings ==
-        # sum of per-doc lengths, exactly, as longs — so the stats
-        # fold reads the cache instead of re-tokenizing the corpus
-        # (docs with empty/NULL text have no postings rows but DO
-        # count in n_docs, which comes from the cheap count-star)
-        full_stats = docs.agg(F.count(F.lit(1)).alias("n_docs")).crossJoin(
-            F.broadcast(
-                postings.agg(
-                    F.coalesce(F.sum("tf"), F.lit(0))
-                    .cast("long")
-                    .alias("total_tokens")
+    with owned_caches() as own:
+        _, matched, dfreq = _matched(docs, qterms, text_col, id_col, postings)
+        # N and avgdl must cover ALL docs, not just matched postings.
+        if postings is not None and full_postings:
+            # a caller-supplied postings frame (typically persisted and
+            # shared across scorers, the rrf_fuse composition) already
+            # holds the corpus token mass: sum(tf) over all postings ==
+            # sum of per-doc lengths, exactly, as longs — so the stats
+            # fold reads the cache instead of re-tokenizing the corpus
+            # (docs with empty/NULL text have no postings rows but DO
+            # count in n_docs, which comes from the cheap count-star)
+            full_stats = docs.agg(F.count(F.lit(1)).alias("n_docs")).crossJoin(
+                F.broadcast(
+                    postings.agg(
+                        F.coalesce(F.sum("tf"), F.lit(0))
+                        .cast("long")
+                        .alias("total_tokens")
+                    )
                 )
             )
+        else:
+            # no postings to reuse: one map-only tokenize scan folding to a
+            # single broadcastable stats row (cheaper than aggregating the
+            # freshly-built postings, which would pay the explode+agg
+            # shuffle a second time)
+            full_stats = docs.select(
+                F.coalesce(F.size(tokens(text_col)), F.lit(0)).cast("long").alias("__dl")
+            ).agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.coalesce(F.sum("__dl"), F.lit(0)).alias("total_tokens"),
+            )
+        idf = dfreq.crossJoin(F.broadcast(full_stats)).select(
+            "term",
+            "n_docs",
+            "total_tokens",
+            F.log(
+                F.lit(1.0)
+                + (F.col("n_docs") - F.col("df") + F.lit(0.5))
+                / (F.col("df") + F.lit(0.5))
+            ).alias("idf"),
         )
-    else:
-        # no postings to reuse: one map-only tokenize scan folding to a
-        # single broadcastable stats row (cheaper than aggregating the
-        # freshly-built postings, which would pay the explode+agg
-        # shuffle a second time)
-        full_stats = docs.select(
-            F.coalesce(F.size(tokens(text_col)), F.lit(0)).cast("long").alias("__dl")
-        ).agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.coalesce(F.sum("__dl"), F.lit(0)).alias("total_tokens"),
+        avgdl = F.col("total_tokens") / F.col("n_docs")
+        tfnorm = (F.col("tf") * F.lit(k1 + 1.0)) / (
+            F.col("tf") + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / avgdl)
         )
-    idf = dfreq.crossJoin(F.broadcast(full_stats)).select(
-        "term",
-        "n_docs",
-        "total_tokens",
-        F.log(
-            F.lit(1.0)
-            + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-            / (F.col("df") + F.lit(0.5))
-        ).alias("idf"),
-    )
-    avgdl = F.col("total_tokens") / F.col("n_docs")
-    tfnorm = (F.col("tf") * F.lit(k1 + 1.0)) / (
-        F.col("tf") + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / avgdl)
-    )
-    contrib = F.round(F.lit(float(IDF_SCALE)) * F.col("qtf") * F.col("idf") * tfnorm).cast(
-        "long"
-    )
-    scored = (
-        matched.join(F.broadcast(qterms), "term")
-        .join(F.broadcast(idf), "term")
-        .groupBy("query_id", id_col)
-        .agg(F.sum(contrib).alias("__score"))
-    )
-    out = _topk(scored, k, id_col).withColumnRenamed("__score", "score_q")
-    return _finish(out, matched) if eager else attach_caches(out, matched)
+        contrib = F.round(F.lit(float(IDF_SCALE)) * F.col("qtf") * F.col("idf") * tfnorm).cast(
+            "long"
+        )
+        scored = (
+            matched.join(F.broadcast(qterms), "term")
+            .join(F.broadcast(idf), "term")
+            .groupBy("query_id", id_col)
+            .agg(F.sum(contrib).alias("__score"))
+        )
+        out = _topk(scored, k, id_col).withColumnRenamed("__score", "score_q")
+        return own.result(out, eager)
 
 
 #: RRF quantization: fused scores are sums of ``RRF_SCALE div

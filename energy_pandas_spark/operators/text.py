@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from energy_pandas_spark.util import track_cache
+from energy_pandas_spark.util import owned_caches, track_cache
 
 from energy_pandas_spark.functions.textfns import (
     char_shingles_of_text,
@@ -1486,51 +1486,50 @@ def train_text_classifier(
         labeled.select(id_col, F.col(label_col).cast("double").alias("__y")),
         id_col,
     )
-    feats = feats.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-    n_docs = labeled.select(id_col).distinct().count()
-    if n_docs == 0:
-        feats.unpersist()
-        return (
-            spark.createDataFrame([], "bucket int, weight double"),
-            0.0,
-        )
-    w = np.zeros(n_features + 1)
-    for _ in range(iters):
-        wdf = spark.createDataFrame(
-            [(int(i), float(v)) for i, v in enumerate(w) if v != 0.0] or
-            [(0, 0.0)],
-            "bucket int, weight double",
-        )
-        margins = (
-            feats.join(F.broadcast(wdf), "bucket", "left")
-            .groupBy(id_col)
-            .agg(
-                F.sum(
-                    F.col("x") * F.coalesce(F.col("weight"), F.lit(0.0))
-                ).alias("__m"),
-                F.first("__y").alias("__y"),
+    with owned_caches() as own:
+        feats = own(feats, StorageLevel.MEMORY_AND_DISK_DESER)
+        n_docs = labeled.select(id_col).distinct().count()
+        if n_docs == 0:
+            return (
+                spark.createDataFrame([], "bucket int, weight double"),
+                0.0,
             )
-            .select(
-                id_col,
-                (
-                    F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("__m")))
-                    - F.col("__y")
-                ).alias("__r"),
+        w = np.zeros(n_features + 1)
+        for _ in range(iters):
+            wdf = spark.createDataFrame(
+                [(int(i), float(v)) for i, v in enumerate(w) if v != 0.0] or
+                [(0, 0.0)],
+                "bucket int, weight double",
             )
-        )
-        grad_rows = (
-            feats.join(margins, id_col)
-            .groupBy("bucket")
-            .agg(F.sum(F.col("x") * F.col("__r")).alias("g"))
-            .collect()
-        )
-        g = np.zeros(n_features + 1)
-        for r in grad_rows:
-            g[r["bucket"]] = r["g"] / n_docs
-        if l2:
-            g[:-1] += l2 * w[:-1]  # don't regularize the intercept
-        w -= lr * g
-    feats.unpersist()
+            margins = (
+                feats.join(F.broadcast(wdf), "bucket", "left")
+                .groupBy(id_col)
+                .agg(
+                    F.sum(
+                        F.col("x") * F.coalesce(F.col("weight"), F.lit(0.0))
+                    ).alias("__m"),
+                    F.first("__y").alias("__y"),
+                )
+                .select(
+                    id_col,
+                    (
+                        F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("__m")))
+                        - F.col("__y")
+                    ).alias("__r"),
+                )
+            )
+            grad_rows = (
+                feats.join(margins, id_col)
+                .groupBy("bucket")
+                .agg(F.sum(F.col("x") * F.col("__r")).alias("g"))
+                .collect()
+            )
+            g = np.zeros(n_features + 1)
+            for r in grad_rows:
+                g[r["bucket"]] = r["g"] / n_docs
+            if l2:
+                g[:-1] += l2 * w[:-1]  # don't regularize the intercept
+            w -= lr * g
     weights_df = spark.createDataFrame(
         [(int(i), float(v)) for i, v in enumerate(w[:-1]) if v != 0.0] or
         [(0, 0.0)],
@@ -2632,53 +2631,46 @@ def langid_ngram_selftrain(
     Returns (id_col, lang_col, out_col, lang_dist) — join back to the
     corpus on ``id_col`` for the full-row variant.  ``eager=True``
     (default) materializes the n_docs-row result via localCheckpoint
-    and RELEASES the cache (the retrieval ``_finish`` hygiene);
-    ``eager=False`` returns lazily with the internal persist attached
-    — release it with ``util.release_caches(out)`` (ADVICE r6)."""
+    and releases the cache; ``eager=False`` returns lazily with the
+    internal persist attached (``util.release_caches(out)``) and
+    handed to the enclosing ``util.owned_caches`` block."""
     if top < 1 or n < 1:
         raise ValueError("top and n must be >= 1")
-    doc_counts = (
-        _char_gram_rows(
-            df, text_col, n, [F.col(id_col), F.col(lang_col).alias("lang")]
+    with owned_caches() as own:
+        doc_counts = own(
+            _char_gram_rows(
+                df, text_col, n, [F.col(id_col), F.col(lang_col).alias("lang")]
+            )
+            .groupBy(id_col, "lang", "gram")
+            .agg(F.count(F.lit(1)).alias("__c"))
         )
-        .groupBy(id_col, "lang", "gram")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .persist()
-    )
-    doc_counts.count()
-    lang_counts = doc_counts.groupBy("lang", "gram").agg(
-        F.sum("__c").alias("__c")
-    )
-    profiles = _rank_profiles(lang_counts, top)
-    doc_prof = (
-        doc_counts.withColumn(
-            "__dr",
-            F.row_number().over(
-                Window.partitionBy(id_col).orderBy(
-                    F.desc("__c"), F.asc("gram")
-                )
-            ),
+        doc_counts.count()
+        lang_counts = doc_counts.groupBy("lang", "gram").agg(
+            F.sum("__c").alias("__c")
         )
-        .filter(F.col("__dr") <= top)
-        .select(id_col, "gram", "__dr")
-    )
-    best = _ct_best(doc_prof, profiles, id_col, top)
-    labels = df.select(id_col, lang_col)
-    out = (
-        labels.join(best, id_col, "left")
-        .withColumn(out_col, F.coalesce("__pred", F.lit("und")))
-        .drop("__pred")
-        .withColumnRenamed("__best_dist", "lang_dist")
-        .select(id_col, lang_col, out_col, "lang_dist")
-    )
-    if eager:
-        out = out.localCheckpoint(eager=True)
-        doc_counts.unpersist()
-    else:
-        from energy_pandas_spark.util import attach_caches
-
-        out = attach_caches(out, doc_counts)
-    return out
+        profiles = _rank_profiles(lang_counts, top)
+        doc_prof = (
+            doc_counts.withColumn(
+                "__dr",
+                F.row_number().over(
+                    Window.partitionBy(id_col).orderBy(
+                        F.desc("__c"), F.asc("gram")
+                    )
+                ),
+            )
+            .filter(F.col("__dr") <= top)
+            .select(id_col, "gram", "__dr")
+        )
+        best = _ct_best(doc_prof, profiles, id_col, top)
+        labels = df.select(id_col, lang_col)
+        out = (
+            labels.join(best, id_col, "left")
+            .withColumn(out_col, F.coalesce("__pred", F.lit("und")))
+            .drop("__pred")
+            .withColumnRenamed("__best_dist", "lang_dist")
+            .select(id_col, lang_col, out_col, "lang_dist")
+        )
+        return own.result(out, eager)
 
 
 def template_lines(

@@ -38,11 +38,11 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from energy_pandas_spark.streaming.sink import (
-    batch_caches,
     history,
     land,
     start,
 )
+from energy_pandas_spark.util import owned_caches
 
 __all__ = [
     "make_frontier_ingest_writer",
@@ -85,7 +85,7 @@ def make_frontier_ingest_writer(
             .withColumn("__h", F.xxhash64(F.lit("url-v1"), F.col("__curl")))
         )
 
-        with batch_caches() as keep:
+        with owned_caches() as keep:
             # the batch's own pages count as seen from this batch on
             page_hashes = keep(
                 batch.select(canonical_url(F.col(url_col)).alias("__curl"))

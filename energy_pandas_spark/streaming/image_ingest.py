@@ -38,11 +38,11 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from energy_pandas_spark.streaming.sink import (
-    batch_caches,
     history,
     land,
     start,
 )
+from energy_pandas_spark.util import owned_caches
 
 __all__ = ["make_image_ingest_writer", "image_ingest", "read_phash_store"]
 
@@ -72,7 +72,7 @@ def make_image_ingest_writer(
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        with batch_caches() as keep:
+        with owned_caches() as keep:
             batch = keep(batch)
             phashed = keep(
                 perceptual_hash(

@@ -34,11 +34,11 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from energy_pandas_spark.streaming.sink import (
-    batch_caches,
     history,
     land,
     start,
 )
+from energy_pandas_spark.util import owned_caches
 
 __all__ = ["make_neardup_ingest_writer", "neardup_ingest", "read_corpus"]
 
@@ -66,7 +66,7 @@ def make_neardup_ingest_writer(
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        with batch_caches() as keep:
+        with owned_caches() as keep:
             batch = keep(batch)
             # 1. in-batch near-dup dedup (keep smallest id per cluster)
             drops = minhash_dedup(

@@ -36,11 +36,11 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from energy_pandas_spark.streaming.sink import (
-    batch_caches,
     history,
     land,
     start,
 )
+from energy_pandas_spark.util import owned_caches
 
 __all__ = [
     "make_line_dedup_ingest_writer",
@@ -71,7 +71,7 @@ def make_line_dedup_ingest_writer(
         spark = batch.sparkSession
         if pre_filter is not None:
             batch = pre_filter(batch)
-        with batch_caches() as keep:
+        with owned_caches() as keep:
             # persist: the batch source feeds the line explosion AND the
             # final non-text-column join — without this an availableNow
             # file source re-reads the batch's input files per consumer

@@ -37,11 +37,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from energy_pandas_spark.streaming.sink import (
-    batch_caches,
     land,
     read_table,
     start,
 )
+from energy_pandas_spark.util import owned_caches
 
 __all__ = ["continuous_rollup", "make_rollup_writer", "rollup_batch"]
 
@@ -185,7 +185,7 @@ def make_rollup_writer(
                 f"on merge"
             )
         # persisted: feeds the days collect AND the merge union
-        with batch_caches() as keep:
+        with owned_caches() as keep:
             fresh = keep(fresh)
             days = list({r[0] for r in fresh.select("day").collect()})
             if not days:

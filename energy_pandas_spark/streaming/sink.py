@@ -37,22 +37,20 @@ was taken before a swap races the backup delete, so callers that hold
 reads across swaps must re-read (the swapped tables are written as one
 file so eager reads are cheap).
 
-Persists taken while a batch is processed belong to that call:
-:func:`batch_caches` releases them when the call exits, also when it
-fails.
+Persists taken while a batch is processed belong to that call: each
+writer runs its batch in one ``util.owned_caches()`` block, which
+releases them when the call exits, also when it fails.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-from typing import Callable, Iterator, Sequence
+from typing import Callable, Sequence
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 __all__ = [
-    "batch_caches",
     "history",
     "land",
     "read_table",
@@ -157,24 +155,6 @@ def land(
         .partitionBy(*partition_by)
         .parquet(path)
     )
-
-
-@contextmanager
-def batch_caches() -> Iterator[Callable[[DataFrame], DataFrame]]:
-    """Own the persists of one ``write_batch`` call: yields ``keep``,
-    which persists a frame and returns it; every kept frame is
-    unpersisted when the block exits, whether it returns or raises."""
-    held: list[DataFrame] = []
-
-    def keep(df: DataFrame) -> DataFrame:
-        held.append(df.persist())
-        return held[-1]
-
-    try:
-        yield keep
-    finally:
-        for df in reversed(held):
-            df.unpersist()
 
 
 def start(

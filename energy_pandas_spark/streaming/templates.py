@@ -33,11 +33,11 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from energy_pandas_spark.streaming.sink import (
-    batch_caches,
     land,
     read_table,
     start,
 )
+from energy_pandas_spark.util import owned_caches
 
 __all__ = [
     "make_template_writer",
@@ -84,7 +84,7 @@ def make_template_writer(
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         # two aggregates read the batch: persist so the micro-batch
         # source computes once (the multi-consumer rule)
-        with batch_caches() as keep:
+        with owned_caches() as keep:
             batch = keep(batch)
             # docs/ lands FIRST: a crash (or a concurrent reader)
             # between the two writes then sees a doc total WITHOUT the

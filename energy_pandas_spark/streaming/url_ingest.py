@@ -41,11 +41,11 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from energy_pandas_spark.streaming.sink import (
-    batch_caches,
     history,
     land,
     start,
 )
+from energy_pandas_spark.util import owned_caches
 
 __all__ = [
     "make_url_dedup_ingest_writer",
@@ -75,7 +75,7 @@ def make_url_dedup_ingest_writer(
         spark = batch.sparkSession
         if pre_filter is not None:
             batch = pre_filter(batch)
-        with batch_caches() as keep:
+        with owned_caches() as keep:
             canon = keep(
                 batch.withColumn("__curl", canonical_url(F.col(url_col)))
             )

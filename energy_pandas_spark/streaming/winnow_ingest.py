@@ -33,11 +33,11 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from energy_pandas_spark.streaming.sink import (
-    batch_caches,
     history,
     land,
     start,
 )
+from energy_pandas_spark.util import owned_caches
 
 __all__ = ["make_winnow_ingest_writer", "winnow_ingest", "read_fp_store"]
 
@@ -63,7 +63,7 @@ def make_winnow_ingest_writer(
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        with batch_caches() as keep:
+        with owned_caches() as keep:
             batch = keep(batch)
             # fingerprint ONCE per batch: the pair detector, the
             # cross-store check, and the store landing all reuse this

@@ -1,79 +1,154 @@
-"""Small shared engine utilities."""
+"""Small shared engine utilities.
+
+Operator persists have one owner. :func:`owned_caches` opens a block
+that owns every persist registered inside it (:func:`track_cache`,
+:func:`attach_caches`, or the block's own ``keep``) and unpersists
+them, newest first, when the block exits, whether it returns or
+raises. Blocks nest; the innermost open block owns, per thread and per
+asyncio task (a ``ContextVar``). A dual-mode operator runs its body in
+one block: with ``eager=True`` it returns a ``localCheckpoint`` of its
+result and the block releases everything; with ``eager=False`` the
+block hands its holdings to the lazy result (``release_caches``) and
+to the enclosing owner. A persist registered outside every block goes
+to the root list, which :func:`drain_tracked_caches` releases. So
+concurrent clients that each wrap their calls in ``owned_caches()``
+cannot release each other's caches, and a root drain never touches a
+persist that a block still owns.
+"""
 
 from __future__ import annotations
 
+import threading
+from contextlib import contextmanager
+from contextvars import ContextVar
+from typing import Iterator
+
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, functions as F
 
 __all__ = [
     "spread_partitions",
     "epoch_micros",
     "round_half_away",
+    "owned_caches",
     "attach_caches",
     "release_caches",
     "track_cache",
     "drain_tracked_caches",
 ]
 
-# Every persist an operator takes out is registered here as well as on
-# the returned frame (``_eps_caches``): DataFrame transformations drop
-# custom attributes, so a caller that wraps an operator's result in
-# further ``select``/``join`` steps loses the per-frame handle — the
-# registry is the release path that survives wrapping. Entries are held
-# strongly until drained (a weakly-held frame that gets GC'd would
-# orphan its JVM cache entry with no way left to unpersist it).
-_TRACKED_CACHES: list[DataFrame] = []
+_CACHE_LOCK = threading.Lock()
+
+
+class CacheOwner:
+    """The persists of one :func:`owned_caches` block, or of the root
+    list. Calling it persists a frame (at ``level``, else the default)
+    and owns it. Frames are held strongly until released: a weakly-held
+    frame that gets GC'd would orphan its JVM cache entry with no way
+    left to unpersist it."""
+
+    def __init__(self, parent: CacheOwner | None = None) -> None:
+        self._parent = parent
+        self._held: list[DataFrame] = []
+
+    def __call__(
+        self, df: DataFrame, level: StorageLevel | None = None
+    ) -> DataFrame:
+        df = df.persist() if level is None else df.persist(level)
+        self._hold([df])
+        return df
+
+    def result(self, out: DataFrame, eager: bool) -> DataFrame:
+        """A dual-mode operator's return value: ``out`` checkpointed
+        (the block then releases everything), or, when not ``eager``,
+        ``out`` lazy with the holdings handed to it and to the
+        enclosing owner. The checkpoint truncates lineage, so executor
+        loss makes its blocks unrecoverable: a fair trade for the
+        small results these operators return, consumed at once.
+        Callers that need lineage recovery pass ``eager=False``."""
+        if eager:
+            return out.localCheckpoint(eager=True)
+        return self._parent._attach(out, self._take())
+
+    def _hold(self, caches) -> None:
+        with _CACHE_LOCK:
+            self._held.extend(caches)
+
+    def _take(self) -> list[DataFrame]:
+        with _CACHE_LOCK:
+            held, self._held = self._held, []
+        return held
+
+    def _attach(self, out: DataFrame, caches) -> DataFrame:
+        out._eps_caches = tuple(getattr(out, "_eps_caches", ())) + tuple(caches)
+        self._hold(caches)
+        return out
+
+
+_ROOT_OWNER = CacheOwner()
+_CACHE_OWNER: ContextVar[CacheOwner] = ContextVar(
+    "energy_pandas_spark_cache_owner", default=_ROOT_OWNER
+)
+
+
+def _release(caches: list[DataFrame]) -> int:
+    for c in reversed(caches):
+        try:
+            c.unpersist()
+        except Exception:  # session already stopped: nothing to free
+            pass
+    return len(caches)
+
+
+@contextmanager
+def owned_caches() -> Iterator[CacheOwner]:
+    """Own every persist registered until the block exits, and release
+    them then, newest first, whether the block returns or raises (the
+    module notes give the rule). Yields the :class:`CacheOwner`."""
+    owner = CacheOwner(_CACHE_OWNER.get())
+    token = _CACHE_OWNER.set(owner)
+    try:
+        yield owner
+    finally:
+        _CACHE_OWNER.reset(token)
+        _release(owner._take())
 
 
 def attach_caches(out: DataFrame, *caches: DataFrame) -> DataFrame:
-    """``eager=False`` twin of the localCheckpoint-and-unpersist hygiene
-    pattern (ADVICE r6): operators that persist internal frames and are
-    asked NOT to materialize eagerly return the lazy plan with those
-    persisted inputs attached (``_eps_caches``), so the caller can
-    release exactly these persists with :func:`release_caches` instead
-    of nuking the whole session via ``spark.catalog.clearCache()``.
-
-    The same frames are also recorded in a module-level registry so
-    that harnesses which materialize many operator results in sequence
-    (bench, correctness sweeps, long-lived pipelines) can release
-    everything in one :func:`drain_tracked_caches` call even when the
-    per-frame handle was lost to an intervening transformation."""
-    held = list(getattr(out, "_eps_caches", ())) + list(caches)
-    out._eps_caches = tuple(held)
-    _TRACKED_CACHES.extend(caches)
-    return out
+    """Attach persisted ``caches`` to the lazy result ``out``, so that
+    :func:`release_caches` frees exactly these, and register them with
+    the innermost :func:`owned_caches` block, or the root list outside
+    every block. The attribute does not survive a DataFrame
+    transformation; the registration does, so the owner (or a root
+    drain) is the release path that always holds."""
+    return _CACHE_OWNER.get()._attach(out, caches)
 
 
 def track_cache(df: DataFrame) -> DataFrame:
-    """Register a persisted frame for :func:`drain_tracked_caches`
-    without attaching it to an output frame — for sites where the
-    output is assembled far from the persist call."""
-    _TRACKED_CACHES.append(df)
+    """Register a persisted frame with the innermost
+    :func:`owned_caches` block, or the root list outside every block,
+    without attaching it to an output frame."""
+    _CACHE_OWNER.get()._hold([df])
     return df
 
 
 def drain_tracked_caches() -> int:
-    """Unpersist every operator-held cache registered since the last
-    drain and return how many were released. Call after materializing
-    an operator's result (or a batch of them) in harness code; safe to
-    call at any time — frames already unpersisted are a no-op."""
-    n = len(_TRACKED_CACHES)
-    for c in _TRACKED_CACHES:
-        try:
-            c.unpersist()
-        except Exception:  # session already stopped — nothing to free
-            pass
-    _TRACKED_CACHES.clear()
-    return n
+    """Unpersist every frame on the root list and return how many were
+    released. Frames that open :func:`owned_caches` blocks hold are
+    not touched, and a frame registered while the drain runs stays
+    for the next drain. Safe to call at any time: frames already
+    unpersisted are a no-op."""
+    return _release(_ROOT_OWNER._take())
 
 
 def release_caches(df: DataFrame) -> None:
     """Release the internal persists attached to an ``eager=False``
     result (see :func:`attach_caches`). Safe to call more than once and
     on frames with nothing attached. The frame's plan remains valid
-    afterwards — recomputation just stops hitting the caches."""
-    for c in getattr(df, "_eps_caches", ()):
-        c.unpersist()
+    afterwards: recomputation just stops hitting the caches."""
+    _release(list(getattr(df, "_eps_caches", ())))
     df._eps_caches = ()
+
 
 def epoch_micros(df: DataFrame, ts_col: str, col: Column | None = None) -> Column:
     """Microseconds since epoch, type-tolerant: ``unix_micros`` rejects
