@@ -117,9 +117,11 @@ class EnergyFrame:
         meta: Mapping[str, Any] | None = None,
         ordinal_col: str | None = None,
     ) -> "EnergyFrame":
-        """Series construction with a synthesized hourly (or ``frequency``)
-        time index starting Jan-1 of ``base_year`` (reference
-        ``EnergySeries.with_timeindex``, energypandas.py:175-229).
+        """Series construction with a synthesized hourly (or ``frequency``,
+        a fixed step in the grammar of
+        :mod:`energy_pandas_spark.core.timeindex`) time index starting
+        Jan-1 of ``base_year`` (reference ``EnergySeries.with_timeindex``,
+        energypandas.py:175-229).
 
         ``data`` may be a driver-side sequence (test-fixture scale) or an
         existing DataFrame with a 0-based ordinal column named
@@ -337,6 +339,17 @@ class EnergyFrame:
         except KeyError:
             raise AttributeError(item) from None
 
+    def _derive(self, df: DataFrame, **changes: Any) -> "EnergyFrame":
+        """A frame over ``df`` with this frame's units, index column,
+        meta and value columns, except those named in ``changes``."""
+        kept = dict(
+            units=self._units,
+            index_col=self._index_col,
+            meta=self._meta,
+            value_cols=self._value_cols,
+        )
+        return EnergyFrame(df, **{**kept, **changes})
+
     # ------------------------------------------------------------------
     # projection (finalize rule 3)
     # ------------------------------------------------------------------
@@ -346,26 +359,14 @@ class EnergyFrame:
         if missing:
             raise KeyError(missing)
         keep = ([self._index_col] if self._index_col else []) + cols
-        return EnergyFrame(
-            self._df.select(keep),
-            units={c: self._units.get(c) for c in cols},
-            index_col=self._index_col,
-            meta=self._meta,
-            value_cols=cols,
-        )
+        return self._derive(self._df.select(keep), value_cols=cols)
 
     def filter(self, condition: Any) -> "EnergyFrame":
         """Row filtering (the reference inherits pandas boolean masks,
         test row-slicing keeps units/metadata): columns, units, and
         meta survive unchanged; only rows drop. Accepts a Column or a
         SQL expression string."""
-        return EnergyFrame(
-            self._df.filter(condition),
-            units=dict(self._units),
-            index_col=self._index_col,
-            meta=self._meta,
-            value_cols=list(self._value_cols),
-        )
+        return self._derive(self._df.filter(condition))
 
     where = filter
 
@@ -399,13 +400,7 @@ class EnergyFrame:
                 new_units[c] = target
             else:
                 exprs.append(F.col(c))
-        return EnergyFrame(
-            self._df.select(exprs),
-            units=new_units,
-            index_col=self._index_col,
-            meta=self._meta,
-            value_cols=self._value_cols,
-        )
+        return self._derive(self._df.select(exprs), units=new_units)
 
     def _to_default(self, table_lookup) -> "EnergyFrame":
         out: EnergyFrame = self
@@ -447,13 +442,7 @@ class EnergyFrame:
                 exprs.append(op(F.col(c), F.lit(other)).alias(c))
             else:
                 exprs.append(F.col(c))
-        return EnergyFrame(
-            self._df.select(exprs),
-            units=self._units,  # rule 1: scalar ops preserve units
-            index_col=self._index_col,
-            meta=self._meta,
-            value_cols=self._value_cols,
-        )
+        return self._derive(self._df.select(exprs))  # rule 1: units kept
 
     def _binary_frame(self, other: "EnergyFrame", op) -> "EnergyFrame":
         """Align on the index column (pandas outer-join alignment,
@@ -482,13 +471,7 @@ class EnergyFrame:
             op(F.col(f"__l_{i}"), F.col(f"__r_{i}")).alias(c)
             for i, (c, _) in enumerate(pairs)
         ]
-        return EnergyFrame(
-            joined.select(exprs),
-            units={c: self._units.get(c) for c, _ in pairs},
-            index_col=self._index_col,
-            meta=self._meta,
-            value_cols=[c for c, _ in pairs],
-        )
+        return self._derive(joined.select(exprs), value_cols=[c for c, _ in pairs])
 
     def __add__(self, other: Any) -> "EnergyFrame":
         return self._binary(other, lambda a, b: a + b)
@@ -521,13 +504,7 @@ class EnergyFrame:
         """Min-max scale to [0,1]; units become dimensionless
         (energypandas.py:330-349, :993-1008)."""
         out = analytics.normalize(self._df, self._value_cols)
-        return EnergyFrame(
-            out,
-            units={c: unit_registry.parse("dimensionless") for c in self._value_cols},
-            index_col=self._index_col,
-            meta=self._meta,
-            value_cols=self._value_cols,
-        )
+        return self._derive(out, units=unit_registry.parse("dimensionless"))
 
     @property
     def ldc(self) -> "EnergyFrame":
@@ -535,13 +512,7 @@ class EnergyFrame:
         if not self.is_series:
             raise ValueError("ldc is defined on a single value column")
         out = analytics.ldc(self._df, self.name, index_name="idx")
-        return EnergyFrame(
-            out,
-            units=self._units,
-            index_col="idx",
-            meta=self._meta,
-            value_cols=self._value_cols,
-        )
+        return self._derive(out, index_col="idx")
 
     def ldc_source(
         self, scoph: float | None = None, scopc: float | None = None
@@ -549,53 +520,41 @@ class EnergyFrame:
         if not self.is_series:
             raise ValueError("ldc_source is defined on a single value column")
         out = analytics.ldc_source(self._df, self.name, scoph, scopc)
-        return EnergyFrame(
-            out, units=self._units, index_col="idx", meta=self._meta,
-            value_cols=self._value_cols,
-        )
+        return self._derive(out, index_col="idx")
 
     def source_side(
         self, scoph: float | None = None, scopc: float | None = None
     ) -> "EnergyFrame":
         out = analytics.source_side(self._df, self._value_cols, scoph, scopc)
-        return EnergyFrame(
-            out, units=self._units, index_col=self._index_col, meta=self._meta,
-            value_cols=self._value_cols,
-        )
+        return self._derive(out)
 
     def monthly(self, agg: str = "avg") -> "EnergyFrame":
         if self._index_col is None:
             raise ValueError("monthly requires a time index column")
         out = analytics.monthly(self._df, self._index_col, self._value_cols, agg)
-        ef = EnergyFrame(
-            out, units=self._units, index_col=self._index_col,
-            meta=self._meta, value_cols=self._value_cols,
-        )
         # reference labels the result frequency "M" (energypandas.py:613-614)
-        ef._meta["frequency"] = "M"
-        return ef
+        return self._derive(out, meta={**self._meta, "frequency": "M"})
 
     def resample(self, freq: str, agg: str = "mean") -> "EnergyFrame":
-        """Freq-general time-bucket downsampling ('15 minutes',
-        '6 hours', '1 day', 'month', ...) — generalizes the reference's
-        monthly-only ``resample("ME").mean()`` surface. Units follow
-        finalize rule 4 (an aggregate of a column keeps its unit)."""
+        """Freq-general time-bucket downsampling ('15 minutes', 'h',
+        '6 hours', '1 day', 'month', ...; the grammar of
+        :mod:`energy_pandas_spark.core.timeindex`) — generalizes the
+        reference's monthly-only ``resample("ME").mean()`` surface.
+        Units follow finalize rule 4 (an aggregate of a column keeps
+        its unit); ``meta["frequency"]`` records ``freq``."""
         if self._index_col is None:
             raise ValueError("resample requires a time index column")
         spark_agg = {"mean": "avg"}.get(agg, agg)
         out = analytics.resample(
             self._df, self._index_col, freq, self._value_cols, spark_agg
         )
-        ef = EnergyFrame(
-            out, units=self._units, index_col=self._index_col,
-            meta=self._meta, value_cols=self._value_cols,
-        )
-        ef._meta["frequency"] = freq
-        return ef
+        return self._derive(out, meta={**self._meta, "frequency": freq})
 
     def fill_gaps(self, freq: str, method: str = "ffill") -> "EnergyFrame":
-        """Reindex onto a regular ``freq`` grid and fill holes (ffill or
-        linear interpolation) — see operators.analytics.fill_gaps."""
+        """Reindex onto a regular ``freq`` grid (a fixed step in the
+        grammar of :mod:`energy_pandas_spark.core.timeindex`) and fill
+        holes (ffill or linear interpolation) — see
+        operators.analytics.fill_gaps."""
         if self._index_col is None:
             raise ValueError("fill_gaps requires a time index column")
         if not self.is_series:
@@ -604,10 +563,7 @@ class EnergyFrame:
             self._df, self._index_col, freq, self.name,
             method=method, mark_gaps=False,
         )
-        return EnergyFrame(
-            out, units=self._units, index_col=self._index_col,
-            meta=self._meta, value_cols=self._value_cols,
-        )
+        return self._derive(out)
 
     def diff(self, periods: int = 1) -> "EnergyFrame":
         """Lagged difference along the time index (pandas ``.diff()``);
@@ -618,17 +574,13 @@ class EnergyFrame:
         out = analytics.diff(
             self._df, self._index_col, self._value_cols, periods=periods
         )
-        return EnergyFrame(
-            out, units=self._units, index_col=self._index_col,
-            meta=self._meta, value_cols=self._value_cols,
-        )
+        return self._derive(out)
 
     def p_max(self, by: str | None = None) -> "float | EnergyFrame":
         out = analytics.p_max(self._df, self._value_cols, by)
         if by is None and self.is_series:
             return out.collect()[0][0]
-        return EnergyFrame(out, units=self._units, meta=self._meta,
-                           value_cols=self._value_cols, index_col=by)
+        return self._derive(out, index_col=by)
 
     def capacity_factor(self) -> float:
         if not self.is_series:
@@ -675,13 +627,7 @@ class EnergyFrame:
         name = how if how != "avg" else "mean"
         keep = [self._index_col] if self._index_col else []
         out = self._df.select(*keep, expr.alias(name))
-        return EnergyFrame(
-            out,
-            units={name: self.unit},
-            index_col=self._index_col,
-            meta=self._meta,
-            value_cols=[name],
-        )
+        return self._derive(out, units={name: self.unit}, value_cols=[name])
 
     def discretize_tsam(self, **kwargs: Any) -> "EnergyFrame":
         """Typical-period clustering (reference energypandas.py:384-412,
@@ -692,10 +638,7 @@ class EnergyFrame:
         if self._index_col is None:
             raise ValueError("discretize_tsam requires a time index")
         out = discretize_frame(self._df, self._index_col, self._value_cols, **kwargs)
-        return EnergyFrame(
-            out, units=self._units, index_col=self._index_col,
-            meta=self._meta, value_cols=self._value_cols,
-        )
+        return self._derive(out)
 
     def unstack_to_periods(self, periodlength: int) -> DataFrame:
         from energy_pandas_spark.operators.reshape import unstack_to_periods

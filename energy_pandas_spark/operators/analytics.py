@@ -23,6 +23,7 @@ from typing import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..core.timeindex import bucket_floor, freq_to_seconds
 from ..util import attach_caches, epoch_micros
 
 __all__ = [
@@ -190,54 +191,15 @@ def monthly(
     month_end_label: bool = True,
 ) -> DataFrame:
     """Month-bucket downsampling (reference ``monthly``:
-    ``resample("ME").mean()``, energypandas.py:610-616). Hash aggregation
-    with map-side partials; the label is the month END to match pandas'
-    'ME' convention (last_day of the truncated month).
+    ``resample("ME").mean()``, energypandas.py:610-616): :func:`resample`
+    at ``month``, relabelled with the month END to match pandas' 'ME'
+    convention (last_day of the bucket, typed like ``ts_col``).
     """
-    cols = _cols(df, value_cols)
-    agg_fn = getattr(F, agg)
-    month = F.date_trunc("month", F.col(ts_col))
-    label = (
-        F.to_timestamp(F.last_day(month)) if month_end_label else month
-    ).alias(ts_col)
-    return (
-        df.groupBy(month.alias("__m"))
-        .agg(*[agg_fn(c).alias(c) for c in cols])
-        .select(
-            (F.to_timestamp(F.last_day("__m")) if month_end_label else F.col("__m")).alias(ts_col),
-            *cols,
-        )
-        .orderBy(ts_col)
-    )
-
-
-_CALENDAR_UNITS = {"week", "month", "quarter", "year"}
-_FIXED_SECONDS = {
-    "second": 1,
-    "minute": 60,
-    "hour": 3600,
-    "day": 86400,
-}
-
-
-def _freq_seconds(freq: str) -> int | None:
-    """Seconds per bucket for fixed-width frequencies ('15 minutes',
-    '6 hours', '1 day'); None for calendar units (month/quarter/...)."""
-    parts = freq.strip().lower().split()
-    if len(parts) == 1:
-        n, unit = 1, parts[0]
-    elif len(parts) == 2:
-        n, unit = int(parts[0]), parts[1]
-    else:
-        raise ValueError(f"unparseable frequency: {freq!r}")
-    unit = unit.rstrip("s")
-    if unit in _CALENDAR_UNITS:
-        if n != 1:
-            raise ValueError(f"calendar frequency must be 1 {unit}, got {freq!r}")
-        return None
-    if unit not in _FIXED_SECONDS:
-        raise ValueError(f"unknown frequency unit: {unit!r}")
-    return n * _FIXED_SECONDS[unit]
+    out = resample(df, ts_col, "month", value_cols, agg)
+    if not month_end_label:
+        return out
+    end = F.last_day(ts_col).cast(dict(out.dtypes)[ts_col])
+    return out.withColumn(ts_col, end)
 
 
 def resample(
@@ -251,27 +213,18 @@ def resample(
     :func:`monthly` (the reference only exposes the monthly special
     case of pandas ``resample``, energypandas.py:610-616).
 
-    Fixed-width frequencies ('15 minutes', '6 hours', '1 day') bucket
-    by epoch arithmetic — ``floor(unix_ts / step) * step`` — which is
-    plain codegen'd long math on the scan and produces the same
-    buckets as an epoch-floor in any other engine (oracle-friendly).
-    Calendar frequencies ('month', 'quarter', 'year', 'week') use
-    ``date_trunc``. One partial+final hash aggregation either way; the
-    bucket label is the LEFT edge.
+    ``freq`` follows the grammar of :mod:`energy_pandas_spark.core.timeindex`
+    and rows bucket by its ``bucket_floor``: fixed steps ('15 minutes',
+    'h', '6 hours', '1 day') are epoch-aligned, the same buckets as an
+    epoch floor in any other engine (oracle-friendly); calendar units
+    ('week', 'month', 'quarter', 'year') truncate the date. One
+    partial+final hash aggregation either way; the bucket label is the
+    LEFT edge, of the input's timestamp type.
     """
     cols = _cols(df, value_cols)
     agg_fn = getattr(F, agg)
-    step = _freq_seconds(freq)
-    if step is None:
-        unit = freq.strip().lower().split()[-1].rstrip("s")
-        bucket = F.date_trunc(unit, F.col(ts_col))
-    else:
-        bucket = F.timestamp_seconds(
-            F.floor(F.unix_timestamp(F.col(ts_col)) / F.lit(step)).cast("long")
-            * F.lit(step)
-        )
     return (
-        df.groupBy(bucket.alias(ts_col))
+        df.groupBy(bucket_floor(df, ts_col, freq).alias(ts_col))
         .agg(*[agg_fn(c).alias(c) for c in cols])
         .orderBy(ts_col)
     )
@@ -297,7 +250,8 @@ def fill_gaps(
     left-join onto it (one shuffle keyed on ``by``); filling is window
     arithmetic inside the key partition:
 
-    - ``ffill``: ``last(value, ignorenulls)`` over rows up to current\n      (``limit`` bounds consecutive fills, pandas ``ffill(limit=)``);
+    - ``ffill``: ``last(value, ignorenulls)`` over rows up to current
+      (``limit`` bounds consecutive fills, pandas ``ffill(limit=)``);
     - ``linear``: previous and next non-null anchors via
       last/first-ignorenulls windows, then the affine blend
       ``prev + (next-prev) * (t-t_prev)/(t_next-t_prev)``.
@@ -307,20 +261,20 @@ def fill_gaps(
     pre-bucket the series into coarse chunks or use the keyed form;
     the keyed form is the 100 TB path.
 
+    ``freq`` is a fixed step in the grammar of
+    :mod:`energy_pandas_spark.core.timeindex` (a calendar unit raises);
+    the grid keeps the input's timestamp type.
+
     Input must already be at-most-one-row-per-(key, bucket) — run
     :func:`resample` first for raw event streams.
     """
     if method not in ("ffill", "linear"):
         raise ValueError(f"unknown fill method: {method!r}")
-    step = _freq_seconds(freq)
-    if step is None:
-        raise ValueError("fill_gaps requires a fixed-width frequency")
+    step = freq_to_seconds(freq)
     keys = [by] if isinstance(by, str) else list(by or [])
-    bucket = F.timestamp_seconds(
-        F.floor(F.unix_timestamp(F.col(ts_col)) / F.lit(step)).cast("long")
-        * F.lit(step)
+    data = df.select(
+        *keys, bucket_floor(df, ts_col, step).alias(ts_col), F.col(value_col)
     )
-    data = df.select(*keys, bucket.alias(ts_col), F.col(value_col))
 
     grid = (
         data.groupBy(*keys)
@@ -335,6 +289,12 @@ def fill_gaps(
         )
     )
     joined = grid.join(data, keys + [ts_col], "left")
+
+    def since(anchor: Column) -> Column:
+        """Microseconds from ``anchor``'s timestamp to the row's."""
+        return epoch_micros(joined, ts_col) - epoch_micros(
+            joined, ts_col, anchor[ts_col]
+        )
 
     w_back = (
         Window.partitionBy(*keys)
@@ -352,14 +312,11 @@ def fill_gaps(
                 F.struct(F.col(ts_col), F.col(value_col)),
             )
             prev = F.last(anchor, ignorenulls=True).over(w_back)
-            gap_steps = (
-                F.unix_timestamp(F.col(ts_col))
-                - F.unix_timestamp(prev[ts_col])
-            ) / F.lit(step)
             filled = (
                 F.when(F.col(value_col).isNotNull(), F.col(value_col))
                 .when(
-                    prev.isNotNull() & (gap_steps <= limit),
+                    prev.isNotNull()
+                    & (since(prev) <= limit * step * 1_000_000),
                     prev[value_col],
                 )
                 .otherwise(F.lit(None).cast("double"))
@@ -375,10 +332,8 @@ def fill_gaps(
         )
         prev = F.last(anchor, ignorenulls=True).over(w_back)
         nxt = F.first(anchor, ignorenulls=True).over(w_fwd)
-        span = F.unix_timestamp(nxt[ts_col]) - F.unix_timestamp(prev[ts_col])
-        frac = (
-            F.unix_timestamp(F.col(ts_col)) - F.unix_timestamp(prev[ts_col])
-        ) / F.when(span == 0, F.lit(1)).otherwise(span)
+        span = since(prev) - since(nxt)  # t_next - t_prev
+        frac = since(prev) / F.when(span == 0, F.lit(1)).otherwise(span)
         blended = prev[value_col] + (nxt[value_col] - prev[value_col]) * frac
         # edges with only one anchor fall back to that anchor (ffill /
         # bfill at the boundaries, matching pandas interpolate defaults)
@@ -843,11 +798,7 @@ def rolling_fit(
         syy = F.sum(y * y).over(w)
         out_cols = list(df.columns)
     else:
-        step = bucket_seconds
-        bucket = F.timestamp_seconds(
-            F.floor(F.unix_timestamp(F.col(ts_col)) / F.lit(step)).cast("long")
-            * F.lit(step)
-        )
+        bucket = bucket_floor(df, ts_col, bucket_seconds)
         base = df.groupBy(*keys, bucket.alias(ts_col)).agg(
             F.count(F.lit(1)).alias("__n"),
             F.sum(x).alias("__sx"),

@@ -7,11 +7,12 @@ more than one user.
 """
 
 from __future__ import annotations
-from energy_pandas_spark.util import track_cache
 
 from typing import Sequence
 
 from pyspark.sql import DataFrame, functions as F
+
+from energy_pandas_spark.util import epoch_micros, track_cache
 
 __all__ = [
     "funnel",
@@ -68,7 +69,8 @@ def funnel_users(
         )
         if within_seconds is not None:
             nxt = nxt.filter(
-                F.unix_micros("__t") - F.unix_micros("__start")
+                epoch_micros(nxt, "__t")
+                - epoch_micros(nxt, "__t", F.col("__start"))
                 <= within_seconds * 1_000_000
             )
         out.append(nxt)

@@ -19,6 +19,9 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..core.timeindex import floor_micros, freq_to_seconds
+from ..util import epoch_micros
+
 __all__ = [
     "asof_join",
     "asof_join_broadcast",
@@ -102,7 +105,7 @@ def asof_join(
             *[F.col(f"__r_{c}").alias(c) for c in right_cols],
         )
     delta = (
-        F.unix_micros(F.col(on)) - F.unix_micros(F.col(f"__r_{on}"))
+        epoch_micros(matched, on) - epoch_micros(matched, on, F.col(f"__r_{on}"))
     ) / F.lit(1_000_000.0)
     if direction == "forward":
         delta = -delta
@@ -229,14 +232,14 @@ def interval_join_bucketed(
 
     Pick ``grain`` close to the typical interval length: the exploded
     interval side carries ``ceil(len/grain) + 1`` rows per interval, and
-    a fact bucket only meets intervals that actually overlap its hour.
+    a fact bucket only meets intervals that actually overlap its bucket.
+    ``grain`` is a fixed step in the grammar of
+    :mod:`energy_pandas_spark.core.timeindex`; a bucket is keyed by its
+    floored epoch microseconds.
     Results are identical to ``interval_join(..., how='inner')``."""
-    grain_s = F.unix_timestamp(
-        F.lit("1970-01-01 00:00:00").cast("timestamp")
-        + F.expr(f"INTERVAL {grain}")
-    )
+    step = freq_to_seconds(grain)
     fb = facts.withColumn(
-        "__bucket", (F.unix_timestamp(ts_col) / grain_s).cast("long")
+        "__bucket", floor_micros(epoch_micros(facts, ts_col), step)
     )
     # empty/inverted intervals match nothing; dropping them here also
     # keeps the bucket sequence ascending (sequence() would otherwise
@@ -246,11 +249,12 @@ def interval_join_bucketed(
         "__bucket",
         F.explode(
             F.sequence(
-                (F.unix_timestamp(start_col) / grain_s).cast("long"),
+                floor_micros(epoch_micros(intervals, start_col), step),
                 # end is exclusive, but a partial last bucket still
-                # overlaps: floor((end - 1s)/grain) covers it without
+                # overlaps: the floor of (end - 1us) covers it without
                 # emitting a bucket the interval never touches
-                ((F.unix_timestamp(end_col) - 1) / grain_s).cast("long"),
+                floor_micros(epoch_micros(intervals, end_col) - 1, step),
+                F.lit(step * 1_000_000).cast("long"),
             )
         ),
     )

@@ -15,8 +15,9 @@ expression, which additionally tolerates EnergyPlus's 1-24 hour
 convention (hour 24 rolls into the next day instead of erroring).
 
 The mixed-units check (energypandas.py:283-288 — raises on >1 distinct
-``Units`` value) is the only eager step: a countDistinct aggregate
-(small job) because unit metadata must be resolved on the driver.
+``Units`` value) is the only eager step: ``distinct().limit(3).collect()``
+on the ``Units`` column (a small job; two values already prove a mix)
+because unit metadata must be resolved on the driver.
 
 Scale: the dedup/pivot aggregations are hash aggregations with map-side
 partials keyed on the timestamp; the pivot's width is bounded by the

@@ -14,6 +14,15 @@ to the root list, which :func:`drain_tracked_caches` releases. So
 concurrent clients that each wrap their calls in ``owned_caches()``
 cannot release each other's caches, and a root drain never touches a
 persist that a block still owns.
+
+Spark keeps one cache entry per plan, so two frames with the same plan
+(the same operator on the same inputs, in two blocks or two clients)
+share it. Every held frame is therefore filed with the other held
+frames of its plan (``semanticHash``, confirmed by ``sameSemantics``),
+and releasing a frame unpersists the entry only when no other frame of
+that plan is still held. A frame is released once, by whichever path
+comes first (its block, a root drain or :func:`release_caches`); later
+releases of it are no-ops.
 """
 
 from __future__ import annotations
@@ -37,7 +46,11 @@ __all__ = [
     "drain_tracked_caches",
 ]
 
-_CACHE_LOCK = threading.Lock()
+_CACHE_LOCK = threading.RLock()  # reentrant: a persist files its frame
+# plan key -> groups of held frames with the same plan; and the plan
+# key and group of each held frame, by id (the groups hold it strongly)
+_PLANS: dict[object, list[list]] = {}
+_HELD: dict[int, tuple[object, list]] = {}
 
 
 class CacheOwner:
@@ -54,8 +67,11 @@ class CacheOwner:
     def __call__(
         self, df: DataFrame, level: StorageLevel | None = None
     ) -> DataFrame:
-        df = df.persist() if level is None else df.persist(level)
-        self._hold([df])
+        # under the lock, no release of the same plan can drop Spark's
+        # entry between this persist and the frame's filing
+        with _CACHE_LOCK:
+            df = df.persist() if level is None else df.persist(level)
+            self._hold([df])
         return df
 
     def result(self, out: DataFrame, eager: bool) -> DataFrame:
@@ -71,6 +87,7 @@ class CacheOwner:
         return self._parent._attach(out, self._take())
 
     def _hold(self, caches) -> None:
+        _file(caches)
         with _CACHE_LOCK:
             self._held.extend(caches)
 
@@ -91,12 +108,51 @@ _CACHE_OWNER: ContextVar[CacheOwner] = ContextVar(
 )
 
 
+def _plan_key(df: DataFrame) -> object:
+    try:
+        return df.semanticHash()
+    except AttributeError:  # a stand-in without a plan is its own plan
+        return ("frame", id(df))
+
+
+def _file(caches) -> None:
+    """File each frame with the held frames of its plan (module notes);
+    a frame already held stays where it is."""
+    for c in caches:
+        if id(c) in _HELD:
+            continue
+        key = _plan_key(c)
+        with _CACHE_LOCK:
+            if id(c) in _HELD:
+                continue
+            groups = _PLANS.setdefault(key, [])
+            group = next((g for g in groups if g[0].sameSemantics(c)), None)
+            if group is None:
+                group = []
+                groups.append(group)
+            group.append(c)
+            _HELD[id(c)] = (key, group)
+
+
 def _release(caches: list[DataFrame]) -> int:
+    """Release each frame, newest first; a plan's cache entry goes with
+    the last held frame of that plan."""
     for c in reversed(caches):
-        try:
-            c.unpersist()
-        except Exception:  # session already stopped: nothing to free
-            pass
+        with _CACHE_LOCK:
+            filed = _HELD.pop(id(c), None)
+            if filed is None:  # released already
+                continue
+            key, group = filed
+            group[:] = [f for f in group if f is not c]
+            if group:
+                continue
+            _PLANS[key].remove(group)  # the plan's only empty group
+            if not _PLANS[key]:
+                del _PLANS[key]
+            try:
+                c.unpersist()
+            except Exception:  # session already stopped: nothing to free
+                pass
     return len(caches)
 
 

@@ -9,6 +9,7 @@ import pathlib
 import re
 import sys
 import threading
+import time
 
 import pytest
 from pyspark import StorageLevel
@@ -267,3 +268,76 @@ def test_only_util_releases_operator_persists():
                 releases.add(f"{rel}:{n.lineno}")
     assert state == set()
     assert releases == set()
+
+
+def test_owners_of_one_plan_keep_its_cache_until_the_last_releases(spark):
+    """Spark keeps one cache entry per plan: the inner block's exit
+    must not drop the entry the outer block still holds."""
+    spark.catalog.clearCache()
+    drain_tracked_caches()
+    jcm = spark._jsparkSession.sharedState().cacheManager()
+
+    def frame():
+        return spark.range(100).selectExpr("id * 2 as x")
+
+    with owned_caches() as outer:
+        kept = outer(frame())
+        kept.count()
+        with owned_caches() as inner:
+            inner(frame()).count()
+        assert kept.storageLevel.useMemory
+    assert jcm.isEmpty()
+
+
+def test_shared_plan_is_unpersisted_only_by_its_last_holder_under_contention():
+    """Frames of one plan share Spark's cache entry: under contention,
+    no release may unpersist it while another frame of the plan is
+    still held, and the last release always does."""
+    drain_tracked_caches()
+    lock = threading.Lock()
+    held: set[int] = set()
+    early: list[int] = []
+    unpersists: list[int] = []
+
+    class PlanFrame(_Frame):
+        def semanticHash(self):
+            return 7
+
+        def sameSemantics(self, other):
+            return True
+
+        def unpersist(self):
+            with lock:
+                unpersists.append(id(self))
+                if held:
+                    early.append(id(self))
+            return super().unpersist()
+
+    def client():
+        for _ in range(300):
+            f = PlanFrame()
+            with owned_caches() as own:
+                own(f)
+                with lock:
+                    held.add(id(f))
+                time.sleep(1e-4)  # use the cache
+                with lock:
+                    held.discard(id(f))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=client) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert early == []
+    assert 0 < len(unpersists) <= 8 * 300
+    last = PlanFrame()
+    with owned_caches() as own:
+        own(last)
+    assert unpersists[-1] == id(last)  # nothing of the plan was left held
